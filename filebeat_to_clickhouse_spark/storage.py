@@ -5,8 +5,10 @@ co-located joins and small-file compaction.
 | MergeTree mechanism | Here |
 |---|---|
 | PARTITION BY toYYYYMM(timestamp) (init.sql:21) | directory partition `ym` → Catalyst partition pruning |
-| ORDER BY (timestamp) (init.sql:22) | sortWithinPartitions before write → parquet row-group min/max skipping |
-| index_granularity (init.sql:23) | parquet row-group/page stats (built-in) |
+| ORDER BY (timestamp) (init.sql:22) | sortWithinPartitions before write → time-ordered files; no row-group skipping, since Spark pushes parquet filters down only for UTC-adjusted timestamps and ``timestamp`` is TIMESTAMP_NTZ |
+| index_granularity (init.sql:23) | parquet row-group/page stats (built-in, unused for ``timestamp`` filters) |
+| fixed DDL schema (init.sql:7-23) | ``read_log_table`` reads with ``LOG_TABLE_SCHEMA``, no inference |
+| one part per partition per INSERT | ``write_log_table`` rebalances by ``ym`` → one file per partition per write |
 | background merges | ``compact_log_table`` (explicit, schedulable) |
 
 Path scope: reads/writes go through Spark and accept any Hadoop URI
@@ -22,12 +24,21 @@ instead). Same scope contract as the idempotent parquet sink
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .normalize import with_month_partition
+from .schema import LOG_ROW_SCHEMA
+
+# The table's declared schema: the 10-column log row plus the partition
+# column, read as the string it is in the directory name.
+LOG_TABLE_SCHEMA = StructType(LOG_ROW_SCHEMA.fields + [StructField("ym", StringType())])
 
 
 _GRAIN_FORMATS = {"month": "yyyyMM", "day": "yyyyMMdd", "hour": "yyyyMMddHH"}
@@ -38,9 +49,12 @@ def write_log_table(
 ) -> None:
     """Write normalized log rows time-partitioned and time-sorted.
 
-    Reads then prune partitions from the path (`ym=...` directories) and
-    skip row groups via the timestamp sort — the two MergeTree behaviors
-    the reference's DDL encodes.
+    Layout: rows are clustered by ``ym`` (AQE rebalance) and sorted by
+    ``(ym, timestamp)``, so one write lands ONE file per partition it
+    touches — more only where a partition's shuffle data exceeds the AQE
+    advisory size (``spark.sql.adaptive.advisoryPartitionSizeInBytes``),
+    which splits it. This is the MergeTree insert shape: one part per
+    partition. Reads prune partitions from the path (``ym=...``).
 
     ``grain`` picks the partition granularity: 'month' mirrors the
     reference's toYYYYMM (init.sql:21) and is right up to ~TB/month;
@@ -69,11 +83,18 @@ def write_log_table(
         out = rows.withColumn(
             "ym", F.date_format(F.col("timestamp"), _GRAIN_FORMATS[grain])
         )
-    # Sort by (ym, timestamp): dynamic-partition writes require an ordering
-    # on the partition columns and will inject their own ym-only sort if the
-    # data isn't already sorted — which would destroy the timestamp order.
+    _write_clustered(out, path, mode, "timestamp")
+
+
+def _write_clustered(df: DataFrame, path: str, mode: str, *sort_cols: str) -> None:
+    """The table layout every writer here shares: rebalance by ``ym`` so
+    each partition's rows meet in one task (one file per partition, split
+    only past the AQE advisory size), then sort by ``ym`` first — a
+    dynamic-partition write injects its own ym-only sort otherwise, which
+    would destroy the ``sort_cols`` order."""
     (
-        out.sortWithinPartitions("ym", "timestamp")
+        df.hint("rebalance", "ym")
+        .sortWithinPartitions("ym", *sort_cols)
         .write.mode(mode)
         .partitionBy("ym")
         .parquet(path)
@@ -118,7 +139,14 @@ def _check_existing_grain(spark: SparkSession, path: str, grain: str) -> None:
 
 
 def read_log_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The log table at ``path`` with its declared schema,
+    ``LOG_TABLE_SCHEMA``: the ``LOG_COLUMNS`` of ``LOG_ROW_SCHEMA`` plus
+    ``ym`` as a string. Nothing is inferred, so the call starts no Spark
+    job (inference reads a parquet footer in one). Columns a file holds
+    outside that schema are not read; a column a file lacks reads NULL.
+    The null-timestamp partition (``ym=__HIVE_DEFAULT_PARTITION__``)
+    reads back with ``ym`` NULL."""
+    return spark.read.schema(LOG_TABLE_SCHEMA).parquet(path)
 
 
 def _exchange_dirs(a: str, b: str) -> None:
@@ -128,7 +156,6 @@ def _exchange_dirs(a: str, b: str) -> None:
     callers fall back to the two-rename swap."""
     import ctypes
     import errno
-    import os
 
     try:
         libc = ctypes.CDLL("libc.so.6", use_errno=True)
@@ -160,9 +187,6 @@ def _swap_partition(live_dir: str, staged_dir: str) -> None:
     then rename the staged dir in — a microseconds-long window where this
     one partition (never the table) is absent.
     """
-    import os
-    import shutil
-
     if not os.path.exists(live_dir):
         os.rename(staged_dir, live_dir)  # brand-new partition: one rename
         return
@@ -191,17 +215,13 @@ def _recover_residue(path: str, staging: str) -> None:
       between its two renames; restore any whose live dir is missing.
     - stale staging → remove (it holds either a partial new generation or
       the old generations after successful exchanges)."""
-    import glob as _glob
-    import os
-    import shutil
-
     backup = path.rstrip("/") + "._old"
     if os.path.exists(backup):
         if os.path.exists(path):
             shutil.rmtree(backup)
         else:
             os.rename(backup, path)
-    for hidden in _glob.glob(os.path.join(path, ".ym=*._old")):
+    for hidden in glob.glob(os.path.join(path, ".ym=*._old")):
         live = os.path.join(path, os.path.basename(hidden)[1 : -len("._old")])
         if os.path.exists(live):
             shutil.rmtree(hidden)
@@ -211,13 +231,29 @@ def _recover_residue(path: str, staging: str) -> None:
         shutil.rmtree(staging)
 
 
-def compact_log_table(
-    spark: SparkSession, path: str, target_partitions: int = 1
+def _compact(
+    spark: SparkSession, path: str, merge: Callable[[DataFrame], DataFrame], *sort_cols: str
 ) -> None:
-    """Rewrite each time partition into ``target_partitions`` time-sorted
-    files — the explicit form of MergeTree's background merges. Streaming
-    appends leave one small file per micro-batch; compaction restores scan
-    efficiency (few large row groups, tight min/max bounds).
+    """The swap protocol every compactor shares (``compact_log_table``
+    documents it): clear residue, write ``merge(table)`` to a staging
+    sibling in the ``write_log_table`` layout sorted by ``sort_cols``
+    within each partition, install it one partition at a time. The table
+    is read with inference, not ``read_log_table``: compaction must keep
+    every column a table holds."""
+    staging = path.rstrip("/") + "._compact"
+    _recover_residue(path, staging)
+    _write_clustered(merge(spark.read.parquet(path)), staging, "overwrite", *sort_cols)
+    for staged in sorted(glob.glob(os.path.join(staging, "ym=*"))):
+        _swap_partition(os.path.join(path, os.path.basename(staged)), staged)
+    shutil.rmtree(staging)  # holds the old generations after the exchanges
+
+
+def compact_log_table(spark: SparkSession, path: str) -> None:
+    """Rewrite each time partition into one time-sorted file (more only
+    past the AQE advisory size, as in ``write_log_table``) — the explicit
+    form of MergeTree's background merges. Streaming appends leave one
+    small file per micro-batch; compaction restores scan efficiency (few
+    files, few large row groups).
 
     Swap protocol: the compacted table is written to a staging sibling,
     then installed ONE PARTITION AT A TIME with an atomic directory
@@ -232,32 +268,11 @@ def compact_log_table(
     partition being swapped are not supported — run one compactor, the
     same single-writer contract ClickHouse background merges have.
     """
-    import glob as _glob
-    import os
-    import shutil
-
-    staging = path.rstrip("/") + "._compact"
-    _recover_residue(path, staging)
-
-    df = spark.read.parquet(path)
-    (
-        df.repartition(target_partitions, "ym")
-        .sortWithinPartitions("ym", "timestamp")
-        .write.mode("overwrite")
-        .partitionBy("ym")
-        .parquet(staging)
-    )
-    for staged in sorted(_glob.glob(os.path.join(staging, "ym=*"))):
-        _swap_partition(os.path.join(path, os.path.basename(staged)), staged)
-    shutil.rmtree(staging)  # holds the old generations after the exchanges
+    _compact(spark, path, lambda df: df, "timestamp")
 
 
 def compact_replacing(
-    spark: SparkSession,
-    path: str,
-    key_cols: list[str],
-    seq_col: str,
-    target_partitions: int = 1,
+    spark: SparkSession, path: str, key_cols: list[str], seq_col: str
 ) -> None:
     """ReplacingMergeTree-style compaction: rewrite each time partition
     keeping only the max-``seq_col`` row per key — ClickHouse's upsert
@@ -280,42 +295,20 @@ def compact_replacing(
     same crash-recovery prelude as ``compact_log_table``; same
     single-writer contract.
     """
-    import glob as _glob
-    import os
-    import shutil
 
-    staging = path.rstrip("/") + "._compact"
-    _recover_residue(path, staging)
+    def merge(df: DataFrame) -> DataFrame:
+        others = [c for c in df.columns if c not in (*key_cols, seq_col, "ym")]
+        packed = df.select("ym", *key_cols, F.struct(seq_col, *others).alias("_v"))
+        last = packed.groupBy("ym", *key_cols).agg(F.max("_v").alias("_v"))
+        return last.select(
+            "ym", *key_cols, F.col("_v." + seq_col), *[F.col("_v." + c) for c in others]
+        ).select(*df.columns)  # restore original column order
 
-    df = spark.read.parquet(path)
-    others = [c for c in df.columns if c not in (*key_cols, seq_col, "ym")]
-    packed = df.select(
-        "ym",
-        *key_cols,
-        F.struct(seq_col, *others).alias("_v"),
-    )
-    last = packed.groupBy("ym", *key_cols).agg(F.max("_v").alias("_v"))
-    merged = last.select("ym", *key_cols, F.col("_v." + seq_col), *[F.col("_v." + c) for c in others]).select(
-        *df.columns  # restore original column order
-    )
-    (
-        merged.repartition(target_partitions, "ym")
-        .sortWithinPartitions("ym", seq_col)
-        .write.mode("overwrite")
-        .partitionBy("ym")
-        .parquet(staging)
-    )
-    for staged in sorted(_glob.glob(os.path.join(staging, "ym=*"))):
-        _swap_partition(os.path.join(path, os.path.basename(staged)), staged)
-    shutil.rmtree(staging)
+    _compact(spark, path, merge, seq_col)
 
 
 def compact_summing(
-    spark: SparkSession,
-    path: str,
-    key_cols: list[str],
-    sum_cols: list[str],
-    target_partitions: int = 1,
+    spark: SparkSession, path: str, key_cols: list[str], sum_cols: list[str]
 ) -> None:
     """SummingMergeTree-style compaction: rewrite each time partition
     collapsing all rows of a key into ONE row whose ``sum_cols`` are the
@@ -336,63 +329,49 @@ def compact_summing(
     staging + atomic per-partition exchange + crash-recovery prelude and
     the same single-writer contract as ``compact_log_table``.
     """
-    import glob as _glob
-    import os
-    import shutil
 
-    staging = path.rstrip("/") + "._compact"
-    _recover_residue(path, staging)
+    def merge(df: DataFrame) -> DataFrame:
+        missing = [c for c in (*key_cols, *sum_cols) if c not in df.columns]
+        if missing:
+            raise ValueError(f"columns not in table: {missing}")
+        others = [c for c in df.columns if c not in (*key_cols, *sum_cols, "ym")]
 
-    df = spark.read.parquet(path)
-    missing = [c for c in (*key_cols, *sum_cols) if c not in df.columns]
-    if missing:
-        raise ValueError(f"columns not in table: {missing}")
-    others = [c for c in df.columns if c not in (*key_cols, *sum_cols, "ym")]
-
-    def _summed(c):
-        # cast back: sum(int) widens to bigint, but a merge must not
-        # drift the table schema across compactions. The cast is non-ANSI
-        # (would silently wrap), so for sub-bigint integral columns the
-        # widened sum is range-checked first and the compaction job FAILS
-        # before any partition is swapped rather than corrupt a counter —
-        # overflow here means the column's type is too small for the
-        # table's merge horizon and must be migrated, not wrapped.
-        dt = df.schema[c].dataType
-        s = F.sum(c)
-        bounds = {"tinyint": 7, "smallint": 15, "int": 31}
-        bits = bounds.get(dt.simpleString())
-        if bits is not None:
-            lim = 1 << bits
-            s = F.when(s.between(-lim, lim - 1), s).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            f"compact_summing: per-key sum of {c!r} overflows {dt.simpleString()}: "
-                        ),
-                        F.sum(c).cast("string"),
+        def _summed(c):
+            # cast back: sum(int) widens to bigint, but a merge must not
+            # drift the table schema across compactions. The cast is non-ANSI
+            # (would silently wrap), so for sub-bigint integral columns the
+            # widened sum is range-checked first and the compaction job FAILS
+            # before any partition is swapped rather than corrupt a counter —
+            # overflow here means the column's type is too small for the
+            # table's merge horizon and must be migrated, not wrapped.
+            dt = df.schema[c].dataType
+            s = F.sum(c)
+            bounds = {"tinyint": 7, "smallint": 15, "int": 31}
+            bits = bounds.get(dt.simpleString())
+            if bits is not None:
+                lim = 1 << bits
+                s = F.when(s.between(-lim, lim - 1), s).otherwise(
+                    F.raise_error(
+                        F.concat(
+                            F.lit(
+                                f"compact_summing: per-key sum of {c!r} overflows {dt.simpleString()}: "
+                            ),
+                            F.sum(c).cast("string"),
+                        )
                     )
                 )
-            )
-        return s.cast(dt).alias(c)
+            return s.cast(dt).alias(c)
 
-    merged = (
-        df.groupBy("ym", *key_cols)
-        .agg(
-            *[_summed(c) for c in sum_cols],
-            *[F.min(c).alias(c) for c in others],
+        return (
+            df.groupBy("ym", *key_cols)
+            .agg(
+                *[_summed(c) for c in sum_cols],
+                *[F.min(c).alias(c) for c in others],
+            )
+            .select(*df.columns)  # restore original column order
         )
-        .select(*df.columns)  # restore original column order
-    )
-    (
-        merged.repartition(target_partitions, "ym")
-        .sortWithinPartitions("ym", *key_cols)
-        .write.mode("overwrite")
-        .partitionBy("ym")
-        .parquet(staging)
-    )
-    for staged in sorted(_glob.glob(os.path.join(staging, "ym=*"))):
-        _swap_partition(os.path.join(path, os.path.basename(staged)), staged)
-    shutil.rmtree(staging)
+
+    _compact(spark, path, merge, *key_cols)
 
 
 def expire_partitions(path: str, keep_from: str) -> list[str]:
@@ -415,15 +394,11 @@ def expire_partitions(path: str, keep_from: str) -> list[str]:
     partition (``__HIVE_DEFAULT_PARTITION__``) has no timestamp and is
     never expired.
     """
-    import glob as _glob
-    import os
-    import shutil
-
     if not keep_from.isdigit():
         raise ValueError(f"keep_from must be a yyyyMM[dd[HH]] string, got {keep_from!r}")
     parts = [
         (os.path.basename(p)[3:], p)
-        for p in sorted(_glob.glob(os.path.join(path, "ym=*")))
+        for p in sorted(glob.glob(os.path.join(path, "ym=*")))
         if os.path.basename(p)[3:] != _NULL_PARTITION
     ]
     for value, _ in parts:  # validate everything BEFORE deleting anything
@@ -470,7 +445,6 @@ def write_bucketed_table(
     emitting its own file per bucket, and the sf10 join re-sorted ~8M
     rows per bucket task on every query), and a one-file bucket reads
     back as one clean sorted stream for the merge join."""
-    import shutil
     from urllib.parse import urlparse
 
     spark = df.sparkSession

@@ -63,6 +63,77 @@ class TestLogTable:
         assert not os.path.exists(path + "._old") and not os.path.exists(path + "._compact")
 
 
+def _spread_rows(spark, n, months, tasks=4):
+    """``n`` log rows over ``months`` consecutive months of 2024, every
+    source task holding rows of every month — the shape that leaves one
+    file per (task, partition) without a clustering write."""
+    from filebeat_to_clickhouse_spark.schema import LOG_COLUMNS
+
+    ts = F.expr(
+        f"timestampadd(SECOND, int(id * 7919 % 86400), "
+        f"timestampadd(MONTH, int(id % {months}), TIMESTAMP_NTZ '2024-01-01 00:00:00'))"
+    )
+    return spark.range(0, n, numPartitions=tasks).select(
+        ts.alias("timestamp"),
+        *[F.format_string(f"{c}-%d", F.col("id")).alias(c) for c in LOG_COLUMNS[1:]],
+    )
+
+
+class TestReadLogTable:
+    def test_declared_schema_starts_no_job(self, spark, tmp_path):
+        from pyspark.sql.types import StringType
+
+        from filebeat_to_clickhouse_spark import storage
+        from filebeat_to_clickhouse_spark.schema import LOG_COLUMNS
+
+        path = str(tmp_path / "logs")
+        storage.write_log_table(_spread_rows(spark, 200, 2).withColumn("extra", F.lit(1)), path)
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        sc.setJobGroup("read_log_table", "no inference job")
+        try:
+            before = len(tracker.getJobIdsForGroup("read_log_table"))
+            got = storage.read_log_table(spark, path)
+            assert len(tracker.getJobIdsForGroup("read_log_table")) == before
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got.columns == [*LOG_COLUMNS, "ym"]  # "extra" is not read
+        assert got.schema["ym"].dataType == StringType()  # inference would say int
+        assert sorted(r["ym"] for r in got.select("ym").distinct().collect()) == ["202401", "202402"]
+
+    def test_null_timestamp_partition_reads_null_ym(self, spark, tmp_path):
+        from filebeat_to_clickhouse_spark import storage
+
+        path = str(tmp_path / "logs")
+        rows = _spread_rows(spark, 10, 1)
+        no_ts = rows.filter(F.col("message") == "message-0").withColumn("timestamp", F.lit(None))
+        storage.write_log_table(rows.union(no_ts), path)
+        assert os.path.isdir(f"{path}/ym=__HIVE_DEFAULT_PARTITION__")
+        [row] = storage.read_log_table(spark, path).filter(F.col("ym").isNull()).collect()
+        assert row["timestamp"] is None and row["message"] == "message-0"
+
+
+class TestWriteLogTableLayout:
+    def test_one_time_sorted_file_per_partition_per_write(self, spark, tmp_path):
+        import pyarrow.parquet as pq
+
+        from filebeat_to_clickhouse_spark import storage
+
+        path = str(tmp_path / "logs")
+        storage.write_log_table(_spread_rows(spark, 4000, 3), path)
+        parts = sorted(glob.glob(f"{path}/ym=*"))
+        assert len(parts) == 3
+        for part in parts:
+            [f] = glob.glob(f"{part}/*.parquet")  # one file, not one per task
+            ts = pq.read_table(f, columns=["timestamp"]).column("timestamp").to_pylist()
+            assert len(ts) > 1000 and ts == sorted(ts)
+
+        # an append touching two of the three months adds one file to each
+        storage.write_log_table(_spread_rows(spark, 2000, 2), path)
+        counts = [len(glob.glob(f"{part}/*.parquet")) for part in parts]
+        assert counts == [2, 2, 1]
+
+
 class TestBucketedJoin:
     def test_bucketed_join_has_no_shuffle(self, spark, tmp_path):
         from filebeat_to_clickhouse_spark import storage
