@@ -120,25 +120,18 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
         )
         stream_fmts.append("tcp")
 
-    # one sink fn PER stream, namespaced by format (sink_id): every query
-    # numbers its own epochs from 0, so a shared idempotence namespace
-    # (parquet epoch markers, ClickHouse dedup tokens) would collide
-    # across queries and silently drop whole micro-batches
+    # one sink fn for every query: the sinks namespace their per-epoch
+    # state (parquet epoch markers, ClickHouse dedup tokens) by the running
+    # query's id, so queries sharing the table never collide
     if sink == "clickhouse":
         ch = cfg.clickhouse
-
-        def make_sink(fmt):
-            return foreach_batch_clickhouse_http(
-                host=ch.host, port=ch.port, database=ch.database,
-                table=ch.table, user=ch.user, password=ch.password,
-                idempotent=ch.idempotent, batch_id_col=ch.batch_id_col,
-                sink_id=fmt,
-            )
+        sink_fn = foreach_batch_clickhouse_http(
+            host=ch.host, port=ch.port, database=ch.database,
+            table=ch.table, user=ch.user, password=ch.password,
+            idempotent=ch.idempotent, batch_id_col=ch.batch_id_col,
+        )
     else:
-        def make_sink(fmt):
-            return foreach_batch_parquet(
-                out_path, idempotent=cfg.parquet_idempotent, sink_id=fmt
-            )
+        sink_fn = foreach_batch_parquet(out_path)
 
     queries = []
     streams = [
@@ -149,7 +142,7 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
         streams.append(("kafka-connector", kafka_rows))
     for fmt, rows in streams:
         writer = (
-            rows.writeStream.foreachBatch(make_sink(fmt))
+            rows.writeStream.foreachBatch(sink_fn)
             .option("checkpointLocation", os.path.join(cfg.checkpoint_dir, fmt))
             .outputMode("append")
         )

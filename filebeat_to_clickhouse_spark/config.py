@@ -58,9 +58,6 @@ class PipelineConfig:
     spool_dir: str = "/var/spool/filebeat-to-ck"
     checkpoint_dir: str = "/var/lib/filebeat-to-ck/checkpoints"
     trigger_seconds: int | None = None  # None → availableNow drains
-    # exactly-once parquet sink (epoch staging + commit markers; see
-    # streaming/sink.py foreach_batch_parquet)
-    parquet_idempotent: bool = False
 
 
 def _get(d: dict, *path, default=None):
@@ -103,7 +100,4 @@ def load_config(path: str | None = None) -> PipelineConfig:
     cfg.spool_dir = _get(raw, "spark", "spool_dir", default=cfg.spool_dir)
     cfg.checkpoint_dir = _get(raw, "spark", "checkpoint_dir", default=cfg.checkpoint_dir)
     cfg.trigger_seconds = _get(raw, "spark", "trigger_seconds", default=cfg.trigger_seconds)
-    cfg.parquet_idempotent = bool(
-        _get(raw, "spark", "parquet_idempotent", default=cfg.parquet_idempotent)
-    )
     return cfg

@@ -5881,7 +5881,11 @@ def mixture_waterfill_q(spark, sf_dir):
 def _mmr_oracle(k: int = 8, dim: int = 64) -> str:
     """Unrolled greedy-MMR oracle: step i picks the argmax of
     0.5·rel − 0.5·max_{j<i} cos(·, s_j) among candidates not yet chosen —
-    the same unrolled-iteration oracle style as the Lloyd and BPE replays."""
+    the same unrolled-iteration oracle style as the Lloyd and BPE replays.
+
+    ``r`` and every round are ``AS MATERIALIZED``: each round references
+    all earlier ones, and inlined (DuckDB's default) the plan re-derives
+    every earlier round per reference."""
 
     def cos(a: str, b: str) -> str:
         return (
@@ -5895,9 +5899,9 @@ def _mmr_oracle(k: int = 8, dim: int = 64) -> str:
         "(a, x) -> a + x)) AS qn FROM e WHERE vec_id = 0)",
         "c AS (SELECT vec_id AS cid, v AS cv, sqrt(list_reduce(list_transform(v, "
         "x -> x * x), (a, x) -> a + x)) AS cn FROM e WHERE vec_id >= 16)",
-        f"r AS (SELECT cid, cv, cn, list_reduce(list_transform(generate_series(1, {dim}), "
+        f"r AS MATERIALIZED (SELECT cid, cv, cn, list_reduce(list_transform(generate_series(1, {dim}), "
         "i -> cv[i] * qv[i]), (acc, x) -> acc + x) / (cn * qn) AS rel FROM c CROSS JOIN q)",
-        "s1 AS (SELECT cid, cv, cn, rel, 0.5 * rel - 0.5 * 0.0 AS score FROM r "
+        "s1 AS MATERIALIZED (SELECT cid, cv, cn, rel, 0.5 * rel - 0.5 * 0.0 AS score FROM r "
         "ORDER BY score DESC, cid LIMIT 1)",
     ]
     for i in range(2, k + 1):
@@ -5906,7 +5910,7 @@ def _mmr_oracle(k: int = 8, dim: int = 64) -> str:
         froms = ", ".join(f"s{j} p{j}" for j in range(1, i))
         notin = " UNION ALL ".join(f"SELECT cid FROM s{j}" for j in range(1, i))
         parts.append(
-            f"s{i} AS (SELECT r.cid, r.cv, r.cn, r.rel, 0.5 * r.rel - 0.5 * {g} AS score "
+            f"s{i} AS MATERIALIZED (SELECT r.cid, r.cv, r.cn, r.rel, 0.5 * r.rel - 0.5 * {g} AS score "
             f"FROM r, {froms} WHERE r.cid NOT IN ({notin}) "
             "ORDER BY score DESC, r.cid LIMIT 1)"
         )

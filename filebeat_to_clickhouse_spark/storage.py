@@ -18,7 +18,7 @@ MAINTENANCE jobs — ``compact_log_table``'s atomic swap and
 ``expire_partitions`` — use posix rename/remove semantics and support
 local or shared-posix paths only (object stores have no atomic directory
 rename; run maintenance there via a table format with snapshot commits
-instead). Same scope contract as the idempotent parquet sink
+instead). Same scope contract as the parquet sink
 (streaming/sink.py).
 """
 

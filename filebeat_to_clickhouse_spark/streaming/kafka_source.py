@@ -44,8 +44,9 @@ import os
 import socket
 import struct
 import threading
-import time
 import zlib
+
+from .receiver import spool_body
 
 API_FETCH, API_LIST_OFFSETS, API_METADATA = 1, 2, 3
 EARLIEST, LATEST = -2, -1
@@ -177,7 +178,6 @@ class KafkaSpoolSource:
         self.poisoned: dict[int, int] = {}
         os.makedirs(os.path.join(spool_dir, "kafka"), exist_ok=True)
         self._offsets_path = os.path.join(spool_dir, "kafka.offsets")
-        self._seq = itertools.count()
         self._corr = itertools.count(1)
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -350,7 +350,7 @@ class KafkaSpoolSource:
                                     drained += 1  # retry immediately, not idle
                             continue
                         fetch_bytes[part] = self.max_bytes
-                        self._spool(b"\n".join(v for _, v in msgs))
+                        spool_body(self.spool_dir, "kafka", b"\n".join(v for _, v in msgs))
                         offsets[part] = max(o for o, _ in msgs) + 1
                         self._save_offsets(offsets)
                         drained += len(msgs)
@@ -369,15 +369,6 @@ class KafkaSpoolSource:
                         s.close()
                     except OSError:
                         pass
-
-    def _spool(self, body: bytes) -> str:
-        name = f"{time.time_ns()}-{next(self._seq)}"
-        tmp = os.path.join(self.spool_dir, "kafka", f".{name}.part")
-        final = os.path.join(self.spool_dir, "kafka", f"{name}.body")
-        with open(tmp, "wb") as out:
-            out.write(body)
-        os.rename(tmp, final)
-        return final
 
     # -- lifecycle ---------------------------------------------------------
     def start(self) -> "KafkaSpoolSource":

@@ -17,9 +17,9 @@ every frame starts with a version byte ``2`` and a type byte —
 All integers big-endian. The sidecar accepts connections, decodes
 events to NDJSON (a ``D`` frame's key/value pairs become a flat JSON
 object), spools each ack window as one body via the atomic ``.part`` →
-rename protocol, and acks the highest sequence — at-least-once into the
-spool (Beats resends unacked windows; replays dedup downstream via
-``streaming_dedup``/the idempotent sinks), exactly-once from the spool
+rename protocol (``receiver.spool_body``), and acks the highest sequence
+— at-least-once into the spool (Beats resends unacked windows; replays
+dedup downstream via ``streaming_dedup``), exactly-once from the spool
 file onward. The Spark side stays an ordinary file stream
 (``stream_spool_dir(spark, spool, fmt="lumberjack")`` + wire parsers).
 """
@@ -27,14 +27,14 @@ file onward. The Spark side stays an ordinary file stream
 from __future__ import annotations
 
 import io
-import itertools
 import json
 import os
 import socketserver
 import struct
 import threading
-import time
 import zlib
+
+from .receiver import spool_body
 
 
 def _read_exact(f, n: int) -> bytes:
@@ -90,7 +90,6 @@ class LumberjackSpoolSource:
     def __init__(self, spool_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.spool_dir = spool_dir
         os.makedirs(os.path.join(spool_dir, "lumberjack"), exist_ok=True)
-        self._seq = itertools.count()
         source = self
 
         class Handler(socketserver.StreamRequestHandler):
@@ -112,14 +111,14 @@ class LumberjackSpoolSource:
                         )
                         pending.append(line)
                         if window and len(pending) >= window:
-                            source._spool(b"\n".join(pending))
+                            spool_body(source.spool_dir, "lumberjack", b"\n".join(pending))
                             pending = []
                             self.wfile.write(b"2A" + struct.pack(">I", max_seq))
                 except (EOFError, ValueError, zlib.error):
                     pass
                 finally:
                     if pending:
-                        source._spool(b"\n".join(pending))
+                        spool_body(source.spool_dir, "lumberjack", b"\n".join(pending))
                         try:
                             self.wfile.write(b"2A" + struct.pack(">I", max_seq))
                         except OSError:
@@ -132,15 +131,6 @@ class LumberjackSpoolSource:
         self._server = Server((host, port), Handler)
         self.port = self._server.server_address[1]
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def _spool(self, body: bytes) -> str:
-        name = f"{time.time_ns()}-{next(self._seq)}"
-        tmp = os.path.join(self.spool_dir, "lumberjack", f".{name}.part")
-        final = os.path.join(self.spool_dir, "lumberjack", f"{name}.body")
-        with open(tmp, "wb") as out:
-            out.write(body)
-        os.rename(tmp, final)
-        return final
 
     def start(self) -> "LumberjackSpoolSource":
         self._thread.start()
@@ -178,7 +168,6 @@ class TcpLinesSpoolSource:
     ):
         self.spool_dir = spool_dir
         os.makedirs(os.path.join(spool_dir, "tcp"), exist_ok=True)
-        self._seq = itertools.count()
         source = self
 
         class Handler(socketserver.StreamRequestHandler):
@@ -190,11 +179,11 @@ class TcpLinesSpoolSource:
                         if line:
                             pending.append(line)
                         if len(pending) >= flush_lines:
-                            source._spool_tcp(b"\n".join(pending))
+                            spool_body(source.spool_dir, "tcp", b"\n".join(pending))
                             pending = []
                 finally:
                     if pending:
-                        source._spool_tcp(b"\n".join(pending))
+                        spool_body(source.spool_dir, "tcp", b"\n".join(pending))
 
         class Server(socketserver.ThreadingTCPServer):
             daemon_threads = True
@@ -203,15 +192,6 @@ class TcpLinesSpoolSource:
         self._server = Server((host, port), Handler)
         self.port = self._server.server_address[1]
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def _spool_tcp(self, body: bytes) -> str:
-        name = f"{time.time_ns()}-{next(self._seq)}"
-        tmp = os.path.join(self.spool_dir, "tcp", f".{name}.part")
-        final = os.path.join(self.spool_dir, "tcp", f"{name}.body")
-        with open(tmp, "wb") as out:
-            out.write(body)
-        os.rename(tmp, final)
-        return final
 
     def start(self) -> "TcpLinesSpoolSource":
         self._thread.start()

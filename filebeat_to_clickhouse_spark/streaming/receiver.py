@@ -37,6 +37,24 @@ FORMATS = ("bulk", "logstash", "events", "single")
 
 _ACTION_VERBS = ("index", "create", "update", "delete")
 
+# process-wide, not per writer: a receiver and sidecars (or two receivers)
+# sharing one spool directory must never pick the same body name
+_SEQ = itertools.count()
+
+
+def spool_body(spool_dir: str, fmt: str, body: bytes) -> str:
+    """Land one body as ``<spool_dir>/<fmt>/<ts>-<seq>.body``: written to a
+    hidden ``.part`` file first and renamed, so the file stream never
+    observes a partial write. The receiver and every input sidecar spool
+    through here."""
+    name = f"{time.time_ns()}-{next(_SEQ)}"
+    tmp = os.path.join(spool_dir, fmt, f".{name}.part")
+    final = os.path.join(spool_dir, fmt, f"{name}.body")
+    with open(tmp, "wb") as f:
+        f.write(body)
+    os.rename(tmp, final)
+    return final
+
 
 def bulk_ack(body: bytes) -> dict:
     """ES-conformant bulk ack for a request body: one ``items`` entry per
@@ -92,7 +110,6 @@ class SpoolReceiver:
         self.spool_dir = spool_dir
         for fmt in FORMATS:
             os.makedirs(os.path.join(spool_dir, fmt), exist_ok=True)
-        self._seq = itertools.count()
         receiver = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -142,7 +159,7 @@ class SpoolReceiver:
                     self._reply(400, {"error": "invalid Content-Length"})
                     return
                 try:
-                    receiver._spool(fmt, body)
+                    spool_body(receiver.spool_dir, fmt, body)
                 except OSError as e:
                     self._reply(500, {"error": f"spool failure: {e}"})
                     return
@@ -154,15 +171,6 @@ class SpoolReceiver:
         self._server = ThreadingHTTPServer((host, port), Handler)
         self.port = self._server.server_address[1]
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-
-    def _spool(self, fmt: str, body: bytes) -> str:
-        name = f"{time.time_ns()}-{next(self._seq)}"
-        tmp = os.path.join(self.spool_dir, fmt, f".{name}.part")
-        final = os.path.join(self.spool_dir, fmt, f"{name}.body")
-        with open(tmp, "wb") as f:
-            f.write(body)
-        os.rename(tmp, final)
-        return final
 
     def start(self) -> "SpoolReceiver":
         self._thread.start()

@@ -26,11 +26,11 @@ spool file onward. A production hardening is LMOVE to a processing list
 
 from __future__ import annotations
 
-import itertools
 import os
 import socket
 import threading
-import time
+
+from .receiver import spool_body
 
 
 class RespError(RuntimeError):
@@ -142,7 +142,6 @@ class RedisSpoolSource:
         self.socket_timeout = socket_timeout
         self.last_error: Exception | None = None  # latest drain-loop failure
         os.makedirs(os.path.join(spool_dir, "redis"), exist_ok=True)
-        self._seq = itertools.count()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
         self._lpop_count_ok = True  # downgraded on first LPOP COUNT error
@@ -176,7 +175,7 @@ class RedisSpoolSource:
                     break
                 items.append(item)
         if items:
-            self._spool(b"\n".join(items))
+            spool_body(self.spool_dir, "redis", b"\n".join(items))
         return len(items)
 
     def _run(self) -> None:
@@ -210,7 +209,7 @@ class RedisSpoolSource:
                         msg = _read_reply(rd)
                         backoff = self.poll_interval
                         if isinstance(msg, list) and len(msg) == 3 and msg[0] == b"message":
-                            self._spool(msg[2])
+                            spool_body(self.spool_dir, "redis", msg[2])
                     return
                 while not self._stop.is_set():
                     if self._drain_list_once(sock, f) == 0:
@@ -228,15 +227,6 @@ class RedisSpoolSource:
                         sock.close()
                     except OSError:
                         pass
-
-    def _spool(self, body: bytes) -> str:
-        name = f"{time.time_ns()}-{next(self._seq)}"
-        tmp = os.path.join(self.spool_dir, "redis", f".{name}.part")
-        final = os.path.join(self.spool_dir, "redis", f"{name}.body")
-        with open(tmp, "wb") as out:
-            out.write(body)
-        os.rename(tmp, final)
-        return final
 
     # -- lifecycle ----------------------------------------------------------
     def start(self) -> "RedisSpoolSource":

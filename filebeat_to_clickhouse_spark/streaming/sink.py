@@ -1,8 +1,18 @@
 """Sinks: partitioned parquet and ClickHouse-over-HTTP (JSONEachRow).
 
-Both are ``foreachBatch`` functions, so Structured Streaming's checkpointed
-at-least-once replay upgrades the reference's fire-and-forget lossy sink
-(main.go:333-337 drops whole batches on error; SURVEY A14).
+Both are ``foreachBatch`` functions behind Structured Streaming's
+replayable file source: a micro-batch that fails, or crashes before its
+offset commit, is replayed with the same epoch id. The parquet sink makes
+that replay a no-op, so the table gets every row exactly once; the
+ClickHouse sink can do the same through server-side insert dedup. This
+replaces the reference's fire-and-forget lossy sink (main.go:333-337
+drops whole batches on error; SURVEY A14).
+
+Both namespace their per-epoch state by the running streaming query's id
+(``sql.streaming.queryId``): it is stable across restarts from one
+checkpoint and differs between checkpoints, so several queries can share
+one table and a fresh checkpoint never meets a previous query's epochs.
+Outside a query (a direct call) the namespace is empty.
 
 The ClickHouse transport reproduces the reference's wire protocol exactly
 (main.go:438-558): ``INSERT INTO db.table FORMAT JSONEachRow`` in the URL
@@ -14,9 +24,10 @@ with the cluster instead of a single driver connection.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
-import threading
+import shutil
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -28,92 +39,59 @@ from ..normalize import format_timestamp_expr
 
 CLICKHOUSE_TIMEOUT_SEC = 30  # main.go:544
 
-# One lock per sink path (per driver process): several streaming queries may
-# share one output table (build_service runs one query per input format), and
-# concurrent append jobs to the same path race on FileOutputCommitter's shared
-# `<path>/_temporary/0` staging dir — the first job's commit deletes the
-# second job's in-flight staging (FileNotFoundException). foreachBatch bodies
-# run on the driver, so serializing the commit section here is sufficient and
-# cluster-size-independent: only the driver-side job submission serializes,
-# executor-side file writes inside a job still fan out.
-_PATH_LOCKS: dict[str, threading.Lock] = {}
-_PATH_LOCKS_GUARD = threading.Lock()
+
+def _query_id(batch: DataFrame) -> str:
+    """The running streaming query's id, or "" outside a query."""
+    return batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId") or ""
 
 
-def _path_lock(path: str) -> threading.Lock:
-    # realpath: two sinks for the same directory spelled differently
-    # ('/data/logs' vs '/data/logs/' vs a relative path) must share ONE
-    # lock, or the staging-dir race reappears under an alias
-    with _PATH_LOCKS_GUARD:
-        return _PATH_LOCKS.setdefault(os.path.realpath(path), threading.Lock())
+def foreach_batch_parquet(path: str, partition_col: str = "ym") -> Callable[[DataFrame, int], None]:
+    """Append each micro-batch exactly once as monthly-partitioned,
+    time-sorted parquet — the Spark analog of MergeTree PARTITION BY
+    toYYYYMM + ORDER BY timestamp (init.sql:21-22), with partition pruning
+    from the directory layout.
 
+    Each epoch is written to its own hidden staging sibling
+    (``._epoch_<ns><id>``, invisible to Spark's partition discovery). Its
+    files are then installed into the live partitions under deterministic
+    names (``epoch-<ns><id>-NNNNN.parquet``), and a zero-byte commit marker
+    ``_epochs/<ns><id>`` is created last. ``<ns>`` is the query id plus
+    ``-``. A replay of a committed epoch sees the marker and is a no-op; a
+    replay after a crash mid-install first deletes that epoch's partial
+    files (their names identify them) and re-installs, so no row is ever
+    duplicated or lost. Concurrent queries on one path share nothing but
+    the live directories, so they need no lock.
 
-def foreach_batch_parquet(
-    path: str, partition_col: str = "ym", idempotent: bool = False,
-    sink_id: str = "",
-) -> Callable[[DataFrame, int], None]:
-    """Append each micro-batch as monthly-partitioned, time-sorted parquet —
-    the Spark analog of MergeTree PARTITION BY toYYYYMM + ORDER BY timestamp
-    (init.sql:21-22): partition pruning from the directory layout, row-group
-    min/max skipping from the sort.
+    Only the latest epoch can be replayed, so committing epoch N deletes
+    the marker of epoch N − ``spark.sql.streaming.minBatchesToRetain``:
+    ``_epochs/`` holds a bounded window per query.
 
-    Delivery semantics (same ladder as the ClickHouse sink below):
-
-    - default: checkpointed at-least-once — a crash between the parquet
-      write and the checkpoint commit makes the replayed micro-batch append
-      its rows a second time.
-    - ``idempotent=True``: exactly-once. Each epoch is written to a hidden
-      staging sibling (``._epoch_<id>``, invisible to Spark's partition
-      discovery), its files are installed into the live partitions under
-      deterministic epoch-tagged names (``epoch-<id>-NNNNN.parquet``), and
-      a zero-byte commit marker ``_epochs/<id>`` is created LAST. A replay
-      of a committed epoch sees the marker and is a no-op; a replay after a
-      crash mid-install first deletes that epoch's partial files (their
-      names identify them) and re-installs, so no row is ever duplicated or
-      lost. Markers/staging use local-filesystem renames — for object
-      stores, use the ClickHouse sink's token dedup or a table format with
-      snapshot commits; this sink's scope is (shared-)posix paths, same as
-      ``storage.compact_log_table``.
-
-    ``sink_id`` namespaces the epoch markers/staging/filenames when SEVERAL
-    streaming queries share one output path (each query numbers its own
-    epochs from 0, so without it query B's epoch 0 would see query A's
-    ``_epochs/0`` marker and silently skip its write). Pass something stable
-    across restarts — the input format name, as ``build_service`` does.
+    Markers and installs use local-filesystem renames; for object stores,
+    use the ClickHouse sink's token dedup or a table format with snapshot
+    commits. This sink's scope is (shared-)posix paths, same as
+    ``storage.compact_log_table``.
     """
-    tag = f"{sink_id}-" if sink_id else ""
 
     def write(batch: DataFrame, epoch_id: int) -> None:
-        cols = batch.columns
-        if partition_col not in cols:
+        if partition_col not in batch.columns:
             from ..normalize import with_month_partition
 
             batch = with_month_partition(batch, out=partition_col)
-        # sort includes the partition col: dynamic-partition writes inject a
-        # partition-col-only sort otherwise, destroying the timestamp order
-        sorted_batch = batch.sortWithinPartitions(partition_col, "timestamp")
-        if not idempotent:
-            # serialized per path: see _PATH_LOCKS above
-            with _path_lock(path):
-                (
-                    sorted_batch.write.mode("append")
-                    .partitionBy(partition_col)
-                    .parquet(path)
-                )
-            return
-
-        import glob
-        import os
-        import shutil
-
-        marker = os.path.join(path, "_epochs", f"{tag}{int(epoch_id)}")
+        qid = _query_id(batch)
+        ns = f"{qid}-" if qid else ""
+        epoch = f"{ns}{int(epoch_id)}"
+        epochs = os.path.join(path, "_epochs")
+        marker = os.path.join(epochs, epoch)
         if os.path.exists(marker):
             return  # epoch fully committed by a previous attempt
-        staging = os.path.join(path, f"._epoch_{tag}{int(epoch_id)}")
+        staging = os.path.join(path, f"._epoch_{epoch}")
         if os.path.exists(staging):
             shutil.rmtree(staging)  # residue of a crashed write; rewrite
+        # sort includes the partition col: dynamic-partition writes inject a
+        # partition-col-only sort otherwise, destroying the timestamp order
         (
-            sorted_batch.write.mode("overwrite")
+            batch.sortWithinPartitions(partition_col, "timestamp")
+            .write.mode("overwrite")
             .partitionBy(partition_col)
             .parquet(staging)
         )
@@ -121,19 +99,24 @@ def foreach_batch_parquet(
         # marker: their deterministic names make the partial visible —
         # delete before re-installing (the "-" after the id keeps epoch 1
         # from matching epoch 10's files)
-        for partial in glob.glob(
-            os.path.join(path, f"{partition_col}=*", f"epoch-{tag}{int(epoch_id)}-*")
-        ):
+        tag = f"epoch-{epoch}-"
+        for partial in glob.glob(os.path.join(path, f"{partition_col}=*", f"{tag}*")):
             os.remove(partial)
         for staged_part in sorted(glob.glob(os.path.join(staging, f"{partition_col}=*"))):
             live_part = os.path.join(path, os.path.basename(staged_part))
             os.makedirs(live_part, exist_ok=True)
             for i, f in enumerate(sorted(glob.glob(os.path.join(staged_part, "*.parquet")))):
-                os.rename(f, os.path.join(live_part, f"epoch-{tag}{int(epoch_id)}-{i:05d}.parquet"))
+                os.rename(f, os.path.join(live_part, f"{tag}{i:05d}.parquet"))
         shutil.rmtree(staging)
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
+        os.makedirs(epochs, exist_ok=True)
         with open(marker, "w"):
             pass  # commit point: marker present == epoch installed exactly once
+        retain = int(batch.sparkSession.conf.get("spark.sql.streaming.minBatchesToRetain"))
+        if epoch_id >= retain:
+            try:
+                os.remove(os.path.join(epochs, f"{ns}{int(epoch_id) - retain}"))
+            except FileNotFoundError:
+                pass
 
     return write
 
@@ -193,7 +176,6 @@ def foreach_batch_clickhouse_http(
     ts_col: str = "timestamp",
     idempotent: bool = False,
     batch_id_col: str | None = None,
-    sink_id: str = "",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink POSTing JSONEachRow INSERTs from executors.
 
@@ -233,17 +215,16 @@ def foreach_batch_clickhouse_http(
       apply — declare the target as ``ReplacingMergeTree`` with the batch
       id in the ORDER BY key and late replays collapse at merge time.
 
-    ``sink_id`` namespaces the dedup token when several streaming queries
-    insert into one table (each numbers its own epochs from 0; without it
-    query B's ``fbck-0-<pid>-of-<n>`` token collides with query A's and
-    the server silently DROPS query B's insert as a "replay"). Pass
-    something stable across restarts — the input format name, as
-    ``build_service`` does.
+    The token starts with the query id (``fbck-<query id>-<epoch_id>-…``):
+    several queries inserting into one table each number their epochs
+    from 0, and without it query B's token would collide with query A's
+    and the server would silently DROP query B's insert as a "replay".
     """
     base_url = clickhouse_insert_url(host, port, database, table)
-    token_ns = f"fbck-{sink_id}" if sink_id else "fbck"
 
     def write(batch: DataFrame, epoch_id: int) -> None:
+        qid = _query_id(batch)
+        token_ns = f"fbck-{qid}" if qid else "fbck"
         out = batch
         if ts_col in batch.columns:
             out = out.withColumn(ts_col, format_timestamp_expr(ts_col))

@@ -13,7 +13,6 @@ def test_defaults_without_file(tmp_path, monkeypatch):
     assert (ch.host, ch.port, ch.database, ch.table) == ("localhost", 8123, "logs", "logs_table")
     assert ch.idempotent is False and ch.batch_id_col is None  # reference wire behavior
     assert cfg.inputs == {} and cfg.trigger_seconds is None
-    assert cfg.parquet_idempotent is False
 
 
 def test_yaml_overrides_and_input_toggles(tmp_path):
@@ -38,7 +37,7 @@ inputs:
 spark:
   spool_dir: /data/spool
   trigger_seconds: 5
-  parquet_idempotent: true
+  parquet_idempotent: true  # a removed key: still loads, ignored
 """
     )
     cfg = load_config(str(p))
@@ -51,4 +50,3 @@ spark:
     assert cfg.inputs["kafka"].enabled is False
     assert cfg.inputs["kafka"].options["brokers"] == ["k1:9092"]
     assert cfg.spool_dir == "/data/spool" and cfg.trigger_seconds == 5
-    assert cfg.parquet_idempotent is True

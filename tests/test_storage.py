@@ -349,7 +349,7 @@ class TestCompactionCrashSafety:
                 F.col("ts").cast("timestamp_ntz").alias("timestamp"), "message"
             ).coalesce(1)
 
-        sink = foreach_batch_parquet(path, idempotent=True)
+        sink = foreach_batch_parquet(path)
         epochs = iter(range(100))
         observed: list[list[str]] = []
         real_swap = storage._swap_partition
