@@ -1,6 +1,6 @@
 """Runnable service: the drop-in equivalent of the reference converter
-process (main.go:140-200) — load config, start the HTTP receiver, run the
-streaming pipeline(s), sink to ClickHouse or parquet.
+process (main.go:140-200) — load config, start the HTTP receiver, run one
+streaming query over its spool, sink to ClickHouse or parquet.
 
     python -m filebeat_to_clickhouse_spark [--config /path/config.yaml]
         [--sink parquet|clickhouse] [--out /data/logs] [--once]
@@ -14,6 +14,7 @@ interrupted with a processing-time trigger.
 from __future__ import annotations
 
 import argparse
+import glob
 import os
 import signal
 import sys
@@ -36,24 +37,30 @@ class _ServiceFront:
 
 
 def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
-    """Start receiver (+ enabled input sidecars) + streaming queries;
-    returns (front, queries). Reference parity: inputs.redis and
-    inputs.logstash (config.yaml:21-24, 35-40) start the RESP and
-    Lumberjack sidecars the reference declares but stubs."""
+    """Start receiver (+ enabled sidecars) + the spool query (+ the Kafka
+    connector query); returns (front, queries), spool query first. Parity:
+    inputs.redis and inputs.logstash (config.yaml:21-24, 35-40) start the
+    RESP and Lumberjack sidecars the reference declares but stubs."""
     from .config import PipelineConfig
     from .session import get_spark
-    from .streaming.pipeline import PARSERS, parse_stream
+    from .streaming.pipeline import parse_stream
     from .streaming.receiver import SpoolReceiver
     from .streaming.sink import foreach_batch_clickhouse_http, foreach_batch_parquet
     from .streaming.sources import stream_spool_dir
 
     assert isinstance(cfg, PipelineConfig)
+    # other subdirs are earlier versions' per-format spools (never emptied)
+    bulk_dir = os.path.join(cfg.spool_dir, "bulk")
+    stale = sorted({os.path.dirname(p) for p in glob.glob(os.path.join(cfg.spool_dir, "*", "*.body"))} - {bulk_dir})
+    if stale:
+        raise RuntimeError(f"{stale[0]} holds old per-format spool bodies: drain it with --once on the "
+                           "previous version, then delete it or move it out of the spool directory")
     spark = spark or get_spark("filebeat-to-clickhouse-spark")
     receiver = SpoolReceiver(cfg.spool_dir, host=cfg.server.host, port=cfg.server.port).start()
+    # checkpoint name "bulk", as before: its committed offsets carry over
+    streams = {"bulk": parse_stream(stream_spool_dir(spark, bulk_dir), "bulk")}
 
-    sidecars = []
-    kafka_rows = None
-    stream_fmts = [f for f in PARSERS if f not in ("redis", "lumberjack", "tcp", "kafka")]
+    sidecars = []  # each spools NDJSON into <spool>/bulk, as the receiver does
     rcfg = cfg.inputs.get("redis")
     if rcfg is not None and rcfg.enabled:
         from .streaming.redis_source import RedisSpoolSource
@@ -70,7 +77,6 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
                 password=rcfg.options.get("password", ""),
             ).start()
         )
-        stream_fmts.append("redis")
     lcfg = cfg.inputs.get("logstash")
     if lcfg is not None and lcfg.enabled:
         from .streaming.lumberjack import LumberjackSpoolSource
@@ -82,15 +88,14 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
                 port=int(lcfg.options.get("port", 5044)),
             ).start()
         )
-        stream_fmts.append("lumberjack")
     kcfg = cfg.inputs.get("kafka")
     if kcfg is not None and kcfg.enabled:
         # two rungs (C2, config.yaml:27-32): mode="connector" is the
         # production path — Spark's own Kafka source with offset tracking
         # inside Structured Streaming (requires spark-sql-kafka on the
-        # cluster; fails at plan build with a clear error when absent) —
-        # and mode="sidecar" is the dependency-free stdlib wire-protocol
-        # client spooling to the landing dir like the Redis/Lumberjack
+        # cluster; fails at plan build with a clear error when absent) as
+        # a query of its own — and mode="sidecar" is the dependency-free
+        # stdlib wire-protocol client spooling like the Redis/Lumberjack
         # inputs, which is also what the in-repo e2e tests exercise.
         brokers = kcfg.options.get("brokers", ["localhost:9092"])
         topic = kcfg.options.get("topic", "filebeat")
@@ -100,11 +105,10 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
             sidecars.append(
                 KafkaSpoolSource(cfg.spool_dir, bootstrap=brokers[0], topic=topic).start()
             )
-            stream_fmts.append("kafka")
         else:
             from .streaming.sources import stream_kafka
 
-            kafka_rows = parse_stream(
+            streams["kafka-connector"] = parse_stream(
                 stream_kafka(spark, ",".join(brokers), topic), "bulk"
             )
     tcfg = cfg.inputs.get("tcp")
@@ -118,7 +122,6 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
                 port=int(tcfg.options.get("port", 9000)),
             ).start()
         )
-        stream_fmts.append("tcp")
 
     # one sink fn for every query: the sinks namespace their per-epoch
     # state (parquet epoch markers, ClickHouse dedup tokens) by the running
@@ -134,16 +137,10 @@ def build_service(cfg, sink: str, out_path: str, once: bool, spark=None):
         sink_fn = foreach_batch_parquet(out_path)
 
     queries = []
-    streams = [
-        (fmt, parse_stream(stream_spool_dir(spark, os.path.join(cfg.spool_dir, fmt)), fmt))
-        for fmt in stream_fmts
-    ]
-    if kafka_rows is not None:
-        streams.append(("kafka-connector", kafka_rows))
-    for fmt, rows in streams:
+    for name, rows in streams.items():
         writer = (
             rows.writeStream.foreachBatch(sink_fn)
-            .option("checkpointLocation", os.path.join(cfg.checkpoint_dir, fmt))
+            .option("checkpointLocation", os.path.join(cfg.checkpoint_dir, name))
             .outputMode("append")
         )
         if once:

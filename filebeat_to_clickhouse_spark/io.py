@@ -151,13 +151,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
     footprint-sizable paths; an UNSIZABLE path (no pyarrow filesystem for
     the URI scheme, unreadable footers) conservatively keeps the rebalance.
 
-    When the rebalance does fire, its width is max(session parallelism,
-    footprint_bytes / maxPartitionBytes): a giant single-row-group file
-    repartitioned only n_par-wide would put N/n_par rows in each task —
-    unbounded as the file grows — which is exactly the task-row bound the
-    fixed-point aggregation kernels (queries._fp_sum_2level) rely on being
-    structural. Scaling the width by bytes restores the same per-task
-    ceiling Spark's own scan splitting enforces (r9 advice). Unsizable
+    When the rebalance does fire, its width is ``max(min(n_par, ceil(rows /
+    minTaskRows)), ceil(bytes / maxPartitionBytes), 1)`` over the footprint
+    (``spark.graft.rebalance.minTaskRows``, default 1024; 0 makes the row
+    term n_par). The row ramp spares a small table n_par near-empty tasks;
+    the byte term keeps a giant single-row-group file from putting N/n_par
+    rows (unbounded) in each task, the task-row bound the fixed-point
+    kernels (queries._fp_sum_2level) rely on being structural. Unsizable
     paths fall back to n_par width — there the _fp_sum_2level int64-partial
     bound is NOT structural (its docstring carries the caveat).
     """
@@ -167,13 +167,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
     # are in place before any plan built here executes.
     configure_session(spark)
     n_par = default_parallelism()
-    # the rebalance-width conf is runtime-toggleable, so it is part of the
-    # plan-cache identity (a stale width would silently survive a conf flip)
+    # the rebalance-width confs are runtime-toggleable, so they are part of
+    # the plan-cache identity (a stale width would silently survive a flip)
     try:
-        _min_task_conf = spark.conf.get("spark.graft.rebalance.minTaskRows", "1024")
+        min_task_conf = spark.conf.get("spark.graft.rebalance.minTaskRows", "1024")
+        mpb_conf = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     except Exception:  # noqa: BLE001 - conf service unavailable → default
-        _min_task_conf = "1024"
-    key = (sf_dir, name, rebalance, n_par, _min_task_conf)
+        min_task_conf, mpb_conf = "1024", "134217728"
+    key = (sf_dir, name, rebalance, n_par, min_task_conf, mpb_conf)
     per_session = _TABLE_CACHE.setdefault(spark, {})
     cached = per_session.get(key)
     if cached is not None:
@@ -185,9 +186,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
         fp = parquet_footprint(path)
         if fp is not None:
             try:
-                mpb = _size_bytes(
-                    spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-                )
+                mpb = _size_bytes(mpb_conf)
             except Exception:  # noqa: BLE001 - unparseable conf → default
                 mpb = 128 * 1024**2
             # Width is DATA-derived, cores-capped (r10 verdict item 1): ramp
@@ -216,9 +215,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = Fa
             # 0/64/256/1024: 12.03/11.99/11.38/11.52 s over 11 probes).
             # minTaskRows=0 restores the r10 flat-n_par behavior.
             try:
-                min_rows = int(
-                    spark.conf.get("spark.graft.rebalance.minTaskRows", "1024")
-                )
+                min_rows = int(min_task_conf)
             except Exception:  # noqa: BLE001 - unparseable conf → default
                 min_rows = 1024
             ramp = -(-fp[2] // max(min_rows, 1)) if min_rows > 0 else n_par

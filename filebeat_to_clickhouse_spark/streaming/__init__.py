@@ -4,10 +4,11 @@ assembled pipelines.
 The reference is a streaming ETL (HTTP push → normalize → ClickHouse,
 /root/reference/filebeat-to-ck/main.go:143-200); here each entry point is a
 ``readStream → parse → normalize → sink`` Structured Streaming query reusing
-the batch parse/normalize transforms verbatim.
+the batch parse/normalize transforms verbatim. The receiver and every input
+sidecar land NDJSON in ``<spool>/bulk``, which the service tails as one query.
 """
 
-from .sources import stream_spool_dir, stream_socket, stream_kafka
+from .sources import stream_spool_dir, stream_kafka
 from .receiver import SpoolReceiver
 from .sink import (
     foreach_batch_parquet,
@@ -36,7 +37,6 @@ from .sessions import sessionize_stream
 
 __all__ = [
     "stream_spool_dir",
-    "stream_socket",
     "stream_kafka",
     "SpoolReceiver",
     "foreach_batch_parquet",

@@ -46,7 +46,7 @@ import struct
 import threading
 import zlib
 
-from .receiver import spool_body
+from .receiver import landing_dir, spool_body
 
 API_FETCH, API_LIST_OFFSETS, API_METADATA = 1, 2, 3
 EARLIEST, LATEST = -2, -1
@@ -148,12 +148,11 @@ def _parse_message_set(buf: bytes) -> tuple[list[tuple[int, bytes]], int]:
 
 
 class KafkaSpoolSource:
-    """Drain a Kafka topic into ``spool_dir/kafka/`` as NDJSON bodies.
+    """Drain a Kafka topic into ``spool_dir/bulk/`` as NDJSON bodies.
 
     Bodies land via the same atomic ``.part`` → rename protocol as the
-    HTTP receiver, so the file stream never observes partial writes and
-    ``stream_spool_dir(spark, spool, fmt="kafka")`` + the NDJSON parsers
-    consume them unchanged.
+    HTTP receiver, into the same directory, so the service's one spool
+    stream and the bulk parser consume them unchanged.
     """
 
     def __init__(
@@ -176,7 +175,7 @@ class KafkaSpoolSource:
         # partition is quarantined (no refetch ladder, no reconnect storm)
         # while every OTHER partition keeps draining; visible to callers
         self.poisoned: dict[int, int] = {}
-        os.makedirs(os.path.join(spool_dir, "kafka"), exist_ok=True)
+        landing_dir(spool_dir)  # kafka.offsets lives at the spool root
         self._offsets_path = os.path.join(spool_dir, "kafka.offsets")
         self._corr = itertools.count(1)
         self._stop = threading.Event()
@@ -350,7 +349,7 @@ class KafkaSpoolSource:
                                     drained += 1  # retry immediately, not idle
                             continue
                         fetch_bytes[part] = self.max_bytes
-                        spool_body(self.spool_dir, "kafka", b"\n".join(v for _, v in msgs))
+                        spool_body(self.spool_dir, b"\n".join(v for _, v in msgs))
                         offsets[part] = max(o for o, _ in msgs) + 1
                         self._save_offsets(offsets)
                         drained += len(msgs)

@@ -20,21 +20,20 @@ object), spools each ack window as one body via the atomic ``.part`` →
 rename protocol (``receiver.spool_body``), and acks the highest sequence
 — at-least-once into the spool (Beats resends unacked windows; replays
 dedup downstream via ``streaming_dedup``), exactly-once from the spool
-file onward. The Spark side stays an ordinary file stream
-(``stream_spool_dir(spark, spool, fmt="lumberjack")`` + wire parsers).
+file onward. The Spark side stays the service's one spool stream
+(``<spool>/bulk`` + the bulk parser).
 """
 
 from __future__ import annotations
 
 import io
 import json
-import os
 import socketserver
 import struct
 import threading
 import zlib
 
-from .receiver import spool_body
+from .receiver import landing_dir, spool_body
 
 
 def _read_exact(f, n: int) -> bytes:
@@ -85,11 +84,11 @@ def decode_frames(f):
 
 class LumberjackSpoolSource:
     """Threaded Lumberjack v2 TCP server spooling event batches under
-    ``spool_dir/lumberjack/``."""
+    ``spool_dir/bulk/``."""
 
     def __init__(self, spool_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.spool_dir = spool_dir
-        os.makedirs(os.path.join(spool_dir, "lumberjack"), exist_ok=True)
+        landing_dir(spool_dir)
         source = self
 
         class Handler(socketserver.StreamRequestHandler):
@@ -111,14 +110,14 @@ class LumberjackSpoolSource:
                         )
                         pending.append(line)
                         if window and len(pending) >= window:
-                            spool_body(source.spool_dir, "lumberjack", b"\n".join(pending))
+                            spool_body(source.spool_dir, b"\n".join(pending))
                             pending = []
                             self.wfile.write(b"2A" + struct.pack(">I", max_seq))
                 except (EOFError, ValueError, zlib.error):
                     pass
                 finally:
                     if pending:
-                        spool_body(source.spool_dir, "lumberjack", b"\n".join(pending))
+                        spool_body(source.spool_dir, b"\n".join(pending))
                         try:
                             self.wfile.write(b"2A" + struct.pack(">I", max_seq))
                         except OSError:
@@ -167,7 +166,7 @@ class TcpLinesSpoolSource:
         flush_lines: int = 256,
     ):
         self.spool_dir = spool_dir
-        os.makedirs(os.path.join(spool_dir, "tcp"), exist_ok=True)
+        landing_dir(spool_dir)
         source = self
 
         class Handler(socketserver.StreamRequestHandler):
@@ -179,11 +178,11 @@ class TcpLinesSpoolSource:
                         if line:
                             pending.append(line)
                         if len(pending) >= flush_lines:
-                            spool_body(source.spool_dir, "tcp", b"\n".join(pending))
+                            spool_body(source.spool_dir, b"\n".join(pending))
                             pending = []
                 finally:
                     if pending:
-                        spool_body(source.spool_dir, "tcp", b"\n".join(pending))
+                        spool_body(source.spool_dir, b"\n".join(pending))
 
         class Server(socketserver.ThreadingTCPServer):
             daemon_threads = True

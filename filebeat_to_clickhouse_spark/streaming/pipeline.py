@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..ingest import parse_bulk_ndjson, parse_json_array, parse_logstash, parse_single
+from ..ingest import parse_bulk_ndjson, parse_single
 from ..normalize import normalize_events
 from .sink import foreach_batch_parquet
 from .sources import stream_spool_dir
@@ -33,19 +33,8 @@ def _interval_seconds(interval: str) -> int:
     except (KeyError, ValueError) as e:
         raise ValueError(f"unsupported interval for banding: {interval!r}") from e
 
-PARSERS = {
-    "bulk": parse_bulk_ndjson,
-    "logstash": parse_logstash,
-    "events": parse_json_array,
-    "single": parse_single,
-    # TCP/Redis/Kafka sidecar spools (redis_source.py, lumberjack.py,
-    # kafka_source.py): NDJSON of bare events — the bulk parser's
-    # bare-document tolerance fits exactly
-    "redis": parse_bulk_ndjson,
-    "lumberjack": parse_bulk_ndjson,
-    "tcp": parse_bulk_ndjson,
-    "kafka": parse_bulk_ndjson,
-}
+# "bulk": the one spool format (receiver.py); "single": line-mode streams
+PARSERS = {"bulk": parse_bulk_ndjson, "single": parse_single}
 
 
 def parse_stream(values: DataFrame, fmt: str) -> DataFrame:
@@ -54,7 +43,7 @@ def parse_stream(values: DataFrame, fmt: str) -> DataFrame:
 
 
 def spooled_log_stream(spark: SparkSession, spool_dir: str, fmt: str = "bulk", **source_opts) -> DataFrame:
-    """Tail ``spool_dir/<fmt>`` (as laid out by SpoolReceiver) → log rows."""
+    """Tail ``spool_dir/<fmt>`` (SpoolReceiver lands every body in ``bulk``) → log rows."""
     import os
 
     return parse_stream(stream_spool_dir(spark, os.path.join(spool_dir, fmt), **source_opts), fmt)

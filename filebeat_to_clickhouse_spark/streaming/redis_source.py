@@ -26,11 +26,10 @@ spool file onward. A production hardening is LMOVE to a processing list
 
 from __future__ import annotations
 
-import os
 import socket
 import threading
 
-from .receiver import spool_body
+from .receiver import landing_dir, spool_body
 
 
 class RespError(RuntimeError):
@@ -114,12 +113,11 @@ class _SockReader:
 
 
 class RedisSpoolSource:
-    """Drain a Redis LIST or PUBSUB channel into ``spool_dir/redis/``.
+    """Drain a Redis LIST or PUBSUB channel into ``spool_dir/bulk/``.
 
     Bodies land via the same atomic ``.part`` → rename protocol as the
-    HTTP receiver, so the file stream never observes partial writes and
-    ``stream_spool_dir(spark, spool, fmt="redis")`` + the NDJSON parsers
-    consume them unchanged.
+    HTTP receiver, into the same directory, so the service's one spool
+    stream and the bulk parser consume them unchanged.
     """
 
     def __init__(
@@ -141,7 +139,7 @@ class RedisSpoolSource:
         self.password, self.batch_size, self.poll_interval = password, batch_size, poll_interval
         self.socket_timeout = socket_timeout
         self.last_error: Exception | None = None  # latest drain-loop failure
-        os.makedirs(os.path.join(spool_dir, "redis"), exist_ok=True)
+        landing_dir(spool_dir)
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
         self._lpop_count_ok = True  # downgraded on first LPOP COUNT error
@@ -175,7 +173,7 @@ class RedisSpoolSource:
                     break
                 items.append(item)
         if items:
-            spool_body(self.spool_dir, "redis", b"\n".join(items))
+            spool_body(self.spool_dir, b"\n".join(items))
         return len(items)
 
     def _run(self) -> None:
@@ -209,7 +207,7 @@ class RedisSpoolSource:
                         msg = _read_reply(rd)
                         backoff = self.poll_interval
                         if isinstance(msg, list) and len(msg) == 3 and msg[0] == b"message":
-                            spool_body(self.spool_dir, "redis", msg[2])
+                            spool_body(self.spool_dir, msg[2])
                     return
                 while not self._stop.is_set():
                     if self._drain_list_once(sock, f) == 0:

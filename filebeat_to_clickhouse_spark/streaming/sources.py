@@ -3,12 +3,11 @@ batch wire-format parsers (ingest.formats) consume unchanged.
 
 | Source | Reference analog |
 |---|---|
-| spool dir (file stream) | HTTP push bodies landed by the receiver sidecar (A1/A3); file-tail input stub (C4, config.yaml:43-46) |
-| socket | TCP JSON-lines server stub (C5, config.yaml:49-52) |
+| spool dir (file stream) | HTTP push bodies landed by the receiver sidecar (A1/A3); file-tail input stub (C4, config.yaml:43-46); events spooled by the TCP (C5), Redis, Lumberjack and Kafka sidecars |
 | kafka | Kafka consumer stub (C2, config.yaml:27-32) |
 
-The reference declares C2/C4/C5 as TODO bodies (main.go:612-665); in Spark
-all three are built-in sources, so "framework prepared" becomes "works".
+The reference declares C2/C4/C5 as TODO bodies (main.go:612-665); here a
+built-in source or a spooling sidecar, so "framework prepared" → "works".
 """
 
 from __future__ import annotations
@@ -39,17 +38,6 @@ def stream_spool_dir(
     if clean_source:
         reader = reader.option("cleanSource", clean_source)
     return reader.load(path)
-
-
-def stream_socket(spark: SparkSession, host: str = "localhost", port: int = 9999) -> DataFrame:
-    """TCP JSON-lines source (C5). Test-quality (no replay), like the
-    reference's stub intent."""
-    return (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", str(port))
-        .load()
-    )
 
 
 #: The record schema the Spark Kafka source emits — the contract

@@ -33,3 +33,29 @@ class TestScanSplitsWide:
 
     def test_unreadable_path_keeps_rebalance(self, tmp_path):
         assert not _scan_splits_wide(str(tmp_path / "missing.parquet"), 2)
+
+
+class TestLoadTablePlanCache:
+    def test_max_partition_bytes_is_part_of_the_key(self, spark):
+        """The rebalance width reads maxPartitionBytes, so a change to that
+        conf must not be served the frame cached under the old value."""
+        import re
+
+        from filebeat_to_clickhouse_spark.io import load_table, parquet_footprint
+
+        def width(df) -> int:
+            return int(re.search(r"Repartition (\d+), true", df._jdf.queryExecution().analyzed().toString()).group(1))
+
+        conf = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(conf)
+        try:
+            spark.conf.set(conf, "134217728")
+            a = load_table(spark, SF_ORACLE, "lineitem", rebalance=True)
+            assert load_table(spark, SF_ORACLE, "lineitem", rebalance=True) is a
+            spark.conf.set(conf, "16k")
+            b = load_table(spark, SF_ORACLE, "lineitem", rebalance=True)
+        finally:
+            spark.conf.set(conf, old)
+        assert b is not a
+        footprint_bytes = parquet_footprint(os.path.join(SF_ORACLE, "lineitem.parquet"))[0]
+        assert width(b) == -(-footprint_bytes // 16384) > width(a)

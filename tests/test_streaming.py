@@ -73,16 +73,62 @@ class TestReceiver:
         ]
 
     def test_format_routing(self, receiver):
+        """Every JSON route lands in <spool>/bulk and nowhere else, as
+        NDJSON: one compact JSON object per line."""
         base = f"http://127.0.0.1:{receiver.port}"
         _post(base + "/logstash", '{"message":"ls"}')
         _post(base + "/", '[{"message":"arr"}]')
         _post(base + "/events", '[{"message":"ev"}]')
-        _post(base + "/ingest", '{"message":"one"}')
-        counts = {
-            fmt: len(os.listdir(os.path.join(receiver.spool_dir, fmt)))
-            for fmt in ("bulk", "logstash", "events", "single")
-        }
-        assert counts == {"bulk": 0, "logstash": 2, "events": 1, "single": 1}
+        _post(base + "/ingest", '{\n  "message": "one"\n}')
+        assert os.listdir(receiver.spool_dir) == ["bulk"]
+        bulk = os.path.join(receiver.spool_dir, "bulk")
+        bodies = sorted(os.listdir(bulk))
+        assert len(bodies) == 4 and all(f.endswith(".body") for f in bodies)
+        lines = [
+            line
+            for b in bodies
+            for line in open(os.path.join(bulk, b), encoding="utf-8").read().split("\n")
+        ]
+        docs = [json.loads(line) for line in lines]
+        assert all(isinstance(d, dict) for d in docs)
+        assert lines == [json.dumps(d, separators=(",", ":"), ensure_ascii=False) for d in docs]
+        assert sorted(d["message"] for d in docs) == ["arr", "ev", "ls", "one"]
+
+    def test_non_json_body_replies_400(self, receiver):
+        """A JSON route answers a body that is not a JSON object or array
+        with a 400 and spools nothing (it used to be acked and dropped)."""
+        import urllib.error
+
+        for body in ("not json", "", '"a string"', '{"message":'):
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{receiver.port}/ingest", data=body.encode(), method="POST"
+            )
+            with pytest.raises(urllib.error.HTTPError) as err:
+                urllib.request.urlopen(req, timeout=10)
+            assert err.value.code == 400, body
+        assert os.listdir(os.path.join(receiver.spool_dir, "bulk")) == []
+
+    def test_oversized_content_length_replies_413(self, receiver):
+        """A Content-Length over the cap is refused before the body is
+        read: a 413 reply, nothing spooled, and the server keeps serving.
+        JSON routes, decoded whole in the receiver, have the lower cap."""
+        import socket as _socket
+
+        from filebeat_to_clickhouse_spark.streaming.receiver import MAX_BODY_BYTES, MAX_JSON_BODY_BYTES
+
+        assert MAX_BODY_BYTES == 100 * 1024 * 1024
+        assert MAX_JSON_BODY_BYTES == 32 * 1024 * 1024
+        for path, cap in ((b"/_bulk", MAX_BODY_BYTES), (b"/events", MAX_JSON_BODY_BYTES)):
+            with _socket.create_connection(("127.0.0.1", receiver.port), timeout=5) as s:
+                s.sendall(
+                    b"POST " + path + b" HTTP/1.1\r\nHost: x\r\n"
+                    b"Content-Length: " + str(cap + 1).encode() + b"\r\n\r\n"
+                )
+                reply = s.recv(4096)
+            assert b" 413 " in reply.split(b"\r\n", 1)[0]
+        assert os.listdir(os.path.join(receiver.spool_dir, "bulk")) == []
+        with urllib.request.urlopen(f"http://127.0.0.1:{receiver.port}/health") as r:
+            assert json.loads(r.read())["status"] == "ok"
 
     def test_malformed_content_length_replies_400(self, receiver):
         """A garbage Content-Length must get an HTTP 400 reply, not a
@@ -105,6 +151,22 @@ class TestReceiver:
 
 
 class TestSpoolPipeline:
+    def test_events_element_keeps_unknown_keys_in_raw_json(self, spark, receiver):
+        """The reference's Extra catch-all: an /events element's keys
+        outside the event schema survive in raw_json."""
+        from filebeat_to_clickhouse_spark.streaming import parse_stream
+
+        _post(
+            f"http://127.0.0.1:{receiver.port}/events",
+            '[{"message":"ev1","extra":{"k":1}},{"message":"ev2","note":"é"}]',
+        )
+        values = spark.read.text(os.path.join(receiver.spool_dir, "bulk"), wholetext=True)
+        raw = {r.message: json.loads(r.raw_json) for r in parse_stream(values, "bulk").collect()}
+        assert raw == {
+            "ev1": {"message": "ev1", "extra": {"k": 1}},
+            "ev2": {"message": "ev2", "note": "é"},
+        }
+
     def test_spool_to_parquet_end_to_end(self, spark, tmp_path, receiver):
         from filebeat_to_clickhouse_spark.streaming import run_spool_to_parquet
 
@@ -547,7 +609,7 @@ class TestParquetIdempotentSink:
         def land(first: int, n: int) -> None:
             for name in names:
                 for i in range(first, first + n):
-                    spool_body(str(tmp_path / name), "bulk",
+                    spool_body(str(tmp_path / name),
                                f'{{"@timestamp":"2025-12-04T10:{i:02d}:00Z","message":"{name}{i}"}}'.encode())
 
         def run_both() -> None:
@@ -709,6 +771,61 @@ class TestServiceAssembly:
         assert got.count() == 6
         msgs = {r["message"] for r in got.select("message").collect()}
         assert {"single one", "arr1", "arr2"} <= msgs
+
+    def test_build_service_starts_one_query(self, spark, tmp_path):
+        """The default config runs one streaming query, checkpointed under
+        <checkpoint_dir>/bulk."""
+        from filebeat_to_clickhouse_spark.__main__ import build_service
+        from filebeat_to_clickhouse_spark.config import PipelineConfig
+
+        cfg = PipelineConfig()
+        cfg.server.host, cfg.server.port = "127.0.0.1", 0
+        cfg.spool_dir, cfg.checkpoint_dir = str(tmp_path / "spool"), str(tmp_path / "ck")
+        front, queries = build_service(cfg, "parquet", str(tmp_path / "out"), once=True, spark=spark)
+        try:
+            assert len(queries) == 1
+            queries[0].awaitTermination(120)
+        finally:
+            front.stop()
+        assert os.listdir(cfg.checkpoint_dir) == ["bulk"]
+
+    def test_build_service_refuses_leftover_per_format_spool(self, spark, tmp_path):
+        """Bodies left in a per-format spool directory by an earlier
+        version would never be read: build_service names the directory
+        and refuses to start. Those versions never deleted the bodies
+        they read, so a drained directory still holds them; the upgrade
+        step, moving it out (or deleting it), clears the refusal, and an
+        emptied per-format directory does not block."""
+        import shutil
+
+        from filebeat_to_clickhouse_spark.__main__ import build_service
+        from filebeat_to_clickhouse_spark.config import PipelineConfig
+        from filebeat_to_clickhouse_spark.streaming.receiver import landing_dir, spool_body
+
+        cfg = PipelineConfig()
+        cfg.server.host, cfg.server.port = "127.0.0.1", 0
+        spool = tmp_path / "spool"
+        cfg.spool_dir, cfg.checkpoint_dir = str(spool), str(tmp_path / "ck")
+        for fmt in ("logstash", "redis"):
+            os.makedirs(spool / fmt)
+            (spool / fmt / "x.body").write_text('{"message":"old"}')
+        with pytest.raises(RuntimeError, match="logstash"):
+            build_service(cfg, "parquet", str(tmp_path / "out"), once=True, spark=spark)
+        assert not os.path.exists(cfg.checkpoint_dir)
+
+        shutil.move(str(spool / "logstash"), str(tmp_path / "logstash-drained"))
+        os.remove(spool / "redis" / "x.body")
+        landing_dir(cfg.spool_dir)
+        spool_body(cfg.spool_dir, b'{"@timestamp":"2025-12-04T10:00:00Z","message":"new"}')
+        out = str(tmp_path / "out")
+        front, queries = build_service(cfg, "parquet", out, once=True, spark=spark)
+        try:
+            assert len(queries) == 1
+            queries[0].awaitTermination(120)
+            assert queries[0].exception() is None
+        finally:
+            front.stop()
+        assert [r.message for r in spark.read.parquet(out).collect()] == ["new"]
 
     @staticmethod
     def _drain(spark, tmp_path, spool_dir: str) -> int:
@@ -1283,7 +1400,7 @@ class TestRedisSpoolSource:
         deadline = _time.time() + 10
         want = b"\n".join(self.ITEMS).decode().count("message")
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "redis", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= want:
                 break
@@ -1331,7 +1448,7 @@ class TestRedisSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "redis", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if '"r1"' in text:
                 break
@@ -1341,7 +1458,7 @@ class TestRedisSpoolSource:
         _time.sleep(0.3)
         second = _FakeRedis([b'{"message":"r2"}'], port=port)  # reborn
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "redis", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if '"r2"' in text:
                 break
@@ -1399,7 +1516,7 @@ class TestRedisSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "redis", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if '"p2"' in text:
                 break
@@ -1451,7 +1568,7 @@ class TestLumberjackSource:
 
             deadline = _time.time() + 5
             while _time.time() < deadline:
-                bodies = glob.glob(os.path.join(spool, "lumberjack", "*.body"))
+                bodies = glob.glob(os.path.join(spool, "bulk", "*.body"))
                 if bodies:
                     break
                 _time.sleep(0.05)
@@ -1480,7 +1597,7 @@ class TestLumberjackSource:
             deadline = _time.time() + 5
             bodies = []
             while _time.time() < deadline and not bodies:
-                bodies = glob.glob(os.path.join(spool, "lumberjack", "*.body"))
+                bodies = glob.glob(os.path.join(spool, "bulk", "*.body"))
                 _time.sleep(0.05)
         assert bodies and "tail" in open(bodies[0]).read()
 
@@ -1623,7 +1740,7 @@ class TestKafkaSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= want:
                 break
@@ -1676,7 +1793,7 @@ class TestKafkaSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count('"message"') >= 3:
                 break
@@ -1712,7 +1829,7 @@ class TestKafkaSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= 3:
                 break
@@ -1749,7 +1866,7 @@ class TestKafkaSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= 3 and src.poisoned:
                 break
@@ -1817,7 +1934,7 @@ class TestKafkaSpoolSource:
         deadline = _time.time() + 10
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= 3:
                 break
@@ -1857,7 +1974,7 @@ class TestKafkaSpoolSource:
         broker.partitions[0].extend(self.VALUES)
         text = ""
         while _time.time() < deadline:
-            bodies = sorted(glob.glob(os.path.join(spool, "kafka", "*.body")))
+            bodies = sorted(glob.glob(os.path.join(spool, "bulk", "*.body")))
             text = "".join(open(b).read() + "\n" for b in bodies)
             if text.count("message") >= 3:
                 break
@@ -1890,7 +2007,7 @@ class TestKafkaSpoolSource:
         try:
             deadline = _time.time() + 10
             while _time.time() < deadline:
-                if glob.glob(os.path.join(cfg.spool_dir, "kafka", "*.body")):
+                if glob.glob(os.path.join(cfg.spool_dir, "bulk", "*.body")):
                     break
                 _time.sleep(0.05)
             for q in queries:
@@ -2059,8 +2176,8 @@ class TestGrowthWatchdog:
 class TestServiceWithSidecars:
     def test_redis_and_lumberjack_inputs_flow_to_sink(self, spark, tmp_path):
         """Full reference config-surface parity: inputs.redis and
-        inputs.logstash enabled → sidecars drain into the spool → the same
-        per-format streams land everything in the sink."""
+        inputs.logstash enabled → sidecars drain into the spool → the one
+        spool stream lands everything in the sink."""
         import struct as _s
         import socket as _socket
         import time as _time
@@ -2090,9 +2207,7 @@ class TestServiceWithSidecars:
             import glob
 
             while _time.time() < deadline:
-                n = len(glob.glob(os.path.join(cfg.spool_dir, "redis", "*.body"))) + len(
-                    glob.glob(os.path.join(cfg.spool_dir, "lumberjack", "*.body"))
-                )
+                n = len(glob.glob(os.path.join(cfg.spool_dir, "bulk", "*.body")))
                 if n >= 2:
                     break
                 _time.sleep(0.05)
@@ -2110,6 +2225,71 @@ class TestServiceWithSidecars:
             redis_srv.close()
         msgs = {r["message"] for r in spark.read.parquet(out).select("message").collect()}
         assert {"via-redis", "via-lumberjack"} <= msgs
+
+
+    def test_every_sidecar_feeds_the_one_spool_query(self, spark, tmp_path):
+        """Redis, Lumberjack, TCP and the Kafka sidecar all enabled: still
+        one streaming query, and every sidecar's rows reach the table."""
+        import glob
+        import socket as _socket
+        import struct as _s
+        import time as _time
+
+        from filebeat_to_clickhouse_spark.__main__ import build_service
+        from filebeat_to_clickhouse_spark.config import InputConfig, PipelineConfig
+        from filebeat_to_clickhouse_spark.streaming import LumberjackSpoolSource, TcpLinesSpoolSource
+
+        redis_srv = _FakeRedis([b'{"message":"via-redis"}'])
+        broker = _FakeKafkaBroker({0: [b'{"message":"via-kafka"}']})
+        cfg = PipelineConfig()
+        cfg.server.host, cfg.server.port = "127.0.0.1", 0
+        cfg.spool_dir, cfg.checkpoint_dir = str(tmp_path / "spool"), str(tmp_path / "ck")
+        cfg.inputs["redis"] = InputConfig(
+            enabled=True, options={"address": f"127.0.0.1:{redis_srv.port}"}
+        )
+        cfg.inputs["logstash"] = InputConfig(enabled=True, options={"port": 0})
+        cfg.inputs["tcp"] = InputConfig(enabled=True, options={"port": 0})
+        cfg.inputs["kafka"] = InputConfig(
+            enabled=True,
+            options={"brokers": [f"127.0.0.1:{broker.port}"], "mode": "sidecar"},
+        )
+        out = str(tmp_path / "logs_table")
+
+        front, queries = build_service(cfg, "parquet", out, once=True, spark=spark)
+        try:
+            assert len(queries) == 1
+            by_type = {type(s): s for s in front._sidecars}
+            assert len(by_type) == 4
+            j = b'{"message":"via-lumberjack"}'
+            with _socket.create_connection(
+                ("127.0.0.1", by_type[LumberjackSpoolSource].port), timeout=5
+            ) as c:
+                c.sendall(b"2W" + _s.pack(">I", 1) + b"2J" + _s.pack(">II", 1, len(j)) + j)
+                c.recv(6)  # ack
+            with _socket.create_connection(
+                ("127.0.0.1", by_type[TcpLinesSpoolSource].port), timeout=5
+            ) as c:
+                c.sendall(b'{"message":"via-tcp"}\n')
+            deadline = _time.time() + 10
+            while _time.time() < deadline:
+                if len(glob.glob(os.path.join(cfg.spool_dir, "bulk", "*.body"))) >= 4:
+                    break
+                _time.sleep(0.05)
+            queries[0].awaitTermination(120)
+        finally:
+            front.stop()
+            redis_srv.close()
+            broker.close()
+        assert set(os.listdir(cfg.spool_dir)) <= {"bulk", "kafka.offsets"}
+        # second drain, no sidecars: picks up bodies spooled after the start
+        cfg.inputs.clear()
+        front2, queries2 = build_service(cfg, "parquet", out, once=True, spark=spark)
+        try:
+            queries2[0].awaitTermination(120)
+        finally:
+            front2.stop()
+        msgs = {r["message"] for r in spark.read.parquet(out).select("message").collect()}
+        assert {"via-redis", "via-lumberjack", "via-tcp", "via-kafka"} <= msgs
 
 
 class TestTcpLinesSource:
@@ -2130,7 +2310,7 @@ class TestTcpLinesSource:
             deadline = _time.time() + 5
             bodies = []
             while _time.time() < deadline and len(bodies) < 2:
-                bodies = glob.glob(os.path.join(spool, "tcp", "*.body"))
+                bodies = glob.glob(os.path.join(spool, "bulk", "*.body"))
                 _time.sleep(0.05)
         text = "\n".join(open(b).read() for b in sorted(bodies))
         df = spark.createDataFrame([(text,)], "value string")
