@@ -14,7 +14,7 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 
 from ..checkpointing import default_checkpoint_dir as _default_ckpt_dir
 from ..checkpointing import make_lineage_cut as _make_lineage_cut
@@ -311,8 +311,6 @@ def connected_components(
     labels = und.select(F.col("u").alias("node")).distinct().withColumn("lbl", F.col("node"))
     changed = 0
     for _ in range(max_iter):
-        from pyspark.sql import Observation
-
         nbr_min = (
             und.join(labels.withColumnRenamed("node", "u"), "u")
             .groupBy(F.col("v").alias("node"))
@@ -339,6 +337,8 @@ def connected_components(
             .observe(obs, F.sum(F.col("_chg").cast("long")).alias("n_chg"))
         )
         new_labels = cut(staged, eager=True)
+        # n_chg is a zero/nonzero convergence signal, not a count of changed rows
+        # (a reliable checkpoint can recompute the round and count it twice)
         changed = int(obs.get["n_chg"] or 0)
         labels = new_labels.drop("_chg")
         if changed == 0:
@@ -366,8 +366,6 @@ def _observe_cap_drops(agg: DataFrame, hot_cond, what: str) -> DataFrame:
     process), and any observation failure leaves the operator untouched."""
     try:
         import threading
-
-        from pyspark.sql import Observation
 
         obs = Observation()
         out = agg.observe(

@@ -101,7 +101,7 @@ def _write_clustered(df: DataFrame, path: str, mode: str, *sort_cols: str) -> No
     )
 
 
-_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # null-timestamp rows land here
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # null-timestamp rows land here
 
 
 def _list_dir_names(spark: SparkSession, path: str) -> list[str]:
@@ -125,7 +125,7 @@ def _check_existing_grain(spark: SparkSession, path: str, grain: str) -> None:
     (hdfs/s3a) table paths too — not only local directories."""
     want = len(_GRAIN_FORMATS[grain])
     for entry in _list_dir_names(spark, path):
-        if entry.startswith("ym=") and entry[3:] != _NULL_PARTITION:
+        if entry.startswith("ym=") and entry[3:] != NULL_PARTITION:
             have = len(entry) - 3
             if have != want:
                 raise ValueError(
@@ -399,7 +399,7 @@ def expire_partitions(path: str, keep_from: str) -> list[str]:
     parts = [
         (os.path.basename(p)[3:], p)
         for p in sorted(glob.glob(os.path.join(path, "ym=*")))
-        if os.path.basename(p)[3:] != _NULL_PARTITION
+        if os.path.basename(p)[3:] != NULL_PARTITION
     ]
     for value, _ in parts:  # validate everything BEFORE deleting anything
         if len(value) != len(keep_from):

@@ -8,6 +8,10 @@ ClickHouse sink can do the same through server-side insert dedup. This
 replaces the reference's fire-and-forget lossy sink (main.go:333-337
 drops whole batches on error; SURVEY A14).
 
+The parquet sink writes each micro-batch from one Arrow table on the
+driver, one time-sorted file per month, with no staging directory: see
+``foreach_batch_parquet`` for why not Spark's file writer.
+
 Both namespace their per-epoch state by the running streaming query's id
 (``sql.streaming.queryId``): it is stable across restarts from one
 checkpoint and differs between checkpoints, so several queries can share
@@ -27,15 +31,17 @@ from __future__ import annotations
 import glob
 import json
 import os
-import shutil
 import urllib.error
 import urllib.parse
 import urllib.request
 from collections.abc import Callable, Iterable, Iterator
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
-from ..normalize import format_timestamp_expr
+from ..normalize import format_timestamp_expr, with_month_partition
+from ..storage import NULL_PARTITION
 
 CLICKHOUSE_TIMEOUT_SEC = 30  # main.go:544
 
@@ -51,31 +57,32 @@ def foreach_batch_parquet(path: str, partition_col: str = "ym") -> Callable[[Dat
     toYYYYMM + ORDER BY timestamp (init.sql:21-22), with partition pruning
     from the directory layout.
 
-    Each epoch is written to its own hidden staging sibling
-    (``._epoch_<ns><id>``, invisible to Spark's partition discovery). Its
-    files are then installed into the live partitions under deterministic
-    names (``epoch-<ns><id>-NNNNN.parquet``), and a zero-byte commit marker
-    ``_epochs/<ns><id>`` is created last. ``<ns>`` is the query id plus
-    ``-``. A replay of a committed epoch sees the marker and is a no-op; a
-    replay after a crash mid-install first deletes that epoch's partial
-    files (their names identify them) and re-installs, so no row is ever
-    duplicated or lost. Concurrent queries on one path share nothing but
-    the live directories, so they need no lock.
+    The batch is collected once (``toArrow``, its only Spark job) and
+    pyarrow writes one timestamp-sorted file per ``partition_col`` value
+    (path-safe, as ``yyyyMM`` is; null → ``__HIVE_DEFAULT_PARTITION__``).
+    Spark's Hadoop file writer has a fixed per-task cost — deserializing
+    the whole Hadoop configuration, and a forked ``chmod`` per mkdir and
+    file create without the native Hadoop library — that is most of a
+    small batch's time. The sources bound the batch (``sources.py``).
 
-    Only the latest epoch can be replayed, so committing epoch N deletes
-    the marker of epoch N − ``spark.sql.streaming.minBatchesToRetain``:
-    ``_epochs/`` holds a bounded window per query.
+    Each file is written under a hidden name in its live partition
+    directory and renamed to ``epoch-<ns><id>-NNNNN.parquet``; a zero-byte
+    commit marker ``_epochs/<ns><id>`` is created last (``<ns>`` is the
+    query id plus ``-``). A replay of a committed epoch is a no-op; a
+    replay after a crash before the marker first deletes the epoch's
+    files, final and hidden (their names identify them), and rewrites, so
+    no row is duplicated or lost. An empty batch writes no file but
+    commits. Concurrent queries on one path share nothing but the live
+    directories, so they need no lock.
 
-    Markers and installs use local-filesystem renames; for object stores,
-    use the ClickHouse sink's token dedup or a table format with snapshot
-    commits. This sink's scope is (shared-)posix paths, same as
-    ``storage.compact_log_table``.
+    Committing epoch N deletes marker N − ``minBatchesToRetain`` (only the
+    latest epoch can be replayed), so ``_epochs/`` stays bounded. Renames
+    need a (shared-)posix path, as ``storage.compact_log_table`` does; for
+    object stores use the ClickHouse sink's token dedup.
     """
 
     def write(batch: DataFrame, epoch_id: int) -> None:
         if partition_col not in batch.columns:
-            from ..normalize import with_month_partition
-
             batch = with_month_partition(batch, out=partition_col)
         qid = _query_id(batch)
         ns = f"{qid}-" if qid else ""
@@ -84,30 +91,22 @@ def foreach_batch_parquet(path: str, partition_col: str = "ym") -> Callable[[Dat
         marker = os.path.join(epochs, epoch)
         if os.path.exists(marker):
             return  # epoch fully committed by a previous attempt
-        staging = os.path.join(path, f"._epoch_{epoch}")
-        if os.path.exists(staging):
-            shutil.rmtree(staging)  # residue of a crashed write; rewrite
-        # sort includes the partition col: dynamic-partition writes inject a
-        # partition-col-only sort otherwise, destroying the timestamp order
-        (
-            batch.sortWithinPartitions(partition_col, "timestamp")
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(staging)
-        )
-        # a crash mid-install left some epoch-tagged files without the
-        # marker: their deterministic names make the partial visible —
-        # delete before re-installing (the "-" after the id keeps epoch 1
-        # from matching epoch 10's files)
+        table = batch.toArrow()
+        # a crash before the marker left some of this epoch's files: delete them
+        # (the "-" after the id keeps epoch 1 from matching epoch 10's files)
         tag = f"epoch-{epoch}-"
-        for partial in glob.glob(os.path.join(path, f"{partition_col}=*", f"{tag}*")):
-            os.remove(partial)
-        for staged_part in sorted(glob.glob(os.path.join(staging, f"{partition_col}=*"))):
-            live_part = os.path.join(path, os.path.basename(staged_part))
-            os.makedirs(live_part, exist_ok=True)
-            for i, f in enumerate(sorted(glob.glob(os.path.join(staged_part, "*.parquet")))):
-                os.rename(f, os.path.join(live_part, f"{tag}{i:05d}.parquet"))
-        shutil.rmtree(staging)
+        for name in (tag, f".{tag}"):
+            for partial in glob.glob(os.path.join(path, f"{partition_col}=*", f"{name}*")):
+                os.remove(partial)
+        keys = table.column(partition_col)
+        data = table.drop_columns([partition_col])
+        for i, value in enumerate(pc.unique(keys).to_pylist()):  # none for an empty batch
+            part = data.filter(pc.is_null(keys) if value is None else pc.equal(keys, value))
+            live = os.path.join(path, f"{partition_col}={NULL_PARTITION if value is None else value}")
+            os.makedirs(live, exist_ok=True)
+            hidden = os.path.join(live, f".{tag}{i:05d}.parquet")
+            pq.write_table(part.sort_by("timestamp"), hidden)
+            os.rename(hidden, os.path.join(live, f"{tag}{i:05d}.parquet"))
         os.makedirs(epochs, exist_ok=True)
         with open(marker, "w"):
             pass  # commit point: marker present == epoch installed exactly once

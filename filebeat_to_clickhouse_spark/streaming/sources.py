@@ -15,6 +15,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from . import receiver
+
 
 def stream_spool_dir(
     spark: SparkSession,
@@ -31,10 +33,20 @@ def stream_spool_dir(
     NDJSON formats and preferable when bodies are concatenated into large
     spool segments. ``clean_source`` ('archive'|'delete') bounds the landing
     dir's growth in production.
+
+    With ``whole_body=True`` and no ``max_files_per_trigger`` a micro-batch
+    reads about ``receiver.MAX_BODY_BYTES`` (one maximum-size request body;
+    a larger file is still read whole): the parquet sink holds each batch
+    in driver memory, so a restart over a large backlog drains in bounded
+    batches. Spark rejects the two limits together. Line mode
+    (``whole_body=False``) stays uncapped: its callers drain a spool in one
+    ``availableNow`` batch, and a batch split would move their watermarks.
     """
     reader = spark.readStream.format("text").option("wholetext", str(whole_body).lower())
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    elif whole_body:
+        reader = reader.option("maxBytesPerTrigger", str(receiver.MAX_BODY_BYTES))
     if clean_source:
         reader = reader.option("cleanSource", clean_source)
     return reader.load(path)
@@ -50,6 +62,12 @@ KAFKA_RECORD_SCHEMA = (
     "key binary, value binary, topic string, partition int, offset bigint, "
     "timestamp timestamp, timestampType int"
 )
+
+
+#: Records per Kafka micro-batch: about ``receiver.MAX_BODY_BYTES`` at ~1 KiB
+#: per Filebeat event, so the parquet sink's driver-side collect stays bounded
+#: when the connector query restarts over a backlog.
+KAFKA_MAX_OFFSETS_PER_TRIGGER = receiver.MAX_BODY_BYTES // 1024
 
 
 def kafka_value_strings(raw: DataFrame) -> DataFrame:
@@ -71,13 +89,15 @@ def stream_kafka(
 
     Requires the spark-sql-kafka package on the cluster; the call itself is
     environment-independent (fails at plan build with "Failed to find data
-    source: kafka" when absent — asserted in tests).
+    source: kafka" when absent — asserted in tests). A micro-batch reads
+    at most ``KAFKA_MAX_OFFSETS_PER_TRIGGER`` records.
     """
     raw = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topics)
         .option("startingOffsets", starting_offsets)
+        .option("maxOffsetsPerTrigger", str(KAFKA_MAX_OFFSETS_PER_TRIGGER))
         .load()
     )
     return kafka_value_strings(raw)

@@ -428,9 +428,9 @@ class TestClickHouseIdempotentSink:
 
 
 class TestParquetIdempotentSink:
-    """The parquet sink's one delivery path, exactly-once: epoch staging +
-    epoch-tagged install + commit marker makes a replayed micro-batch a
-    no-op, mirroring the ClickHouse sink's token dedup test above."""
+    """The parquet sink's one delivery path, exactly-once: epoch-tagged
+    files + commit marker make a replayed micro-batch a no-op, mirroring
+    the ClickHouse sink's token dedup test above."""
 
     @staticmethod
     def _batch(spark, n=6, month="2025-12"):
@@ -514,6 +514,148 @@ class TestParquetIdempotentSink:
             spark.conf.set(key, old)
         assert spark.read.parquet(out).count() == 12
 
+    def test_empty_batch_commits_marker_and_writes_no_file(self, spark, tmp_path):
+        """Bodies holding only junk and action lines parse to zero rows: the
+        epoch still commits, writes no data file, and its replay is a no-op."""
+        import glob
+        import os
+
+        from filebeat_to_clickhouse_spark.streaming import sink as sink_mod
+        from filebeat_to_clickhouse_spark.streaming.pipeline import parse_stream
+
+        out = str(tmp_path / "logs")
+        fn = sink_mod.foreach_batch_parquet(out)
+        values = spark.createDataFrame([('{"index":{}}\njunk line\n{"delete":{"_id":"a"}}',)], "value string")
+        empty = parse_stream(values, "bulk")
+        fn(empty, 0)
+        assert os.listdir(os.path.join(out, "_epochs")) == ["0"]
+        assert not glob.glob(os.path.join(out, "**", "*.parquet"), recursive=True)
+        fn(empty, 0)  # the replay
+        assert os.listdir(out) == ["_epochs"]
+        fn(self._batch(spark, n=2), 1)  # the next epoch still appends
+        assert spark.read.parquet(out).count() == 2
+
+    def test_output_contract_one_sorted_file_per_month(self, spark, tmp_path):
+        """One epoch over 4 input partitions, 3 months and a null timestamp:
+        one time-sorted file per ``ym``, footers typed as Spark's own parquet
+        writer types them, every row read back by ``read_log_table``, and
+        one Spark job for the whole epoch."""
+        import glob
+        import os
+
+        import pyarrow.parquet as pq
+
+        from filebeat_to_clickhouse_spark import storage
+        from filebeat_to_clickhouse_spark.normalize import with_month_partition
+        from filebeat_to_clickhouse_spark.schema import LOG_COLUMNS, LOG_ROW_SCHEMA
+        from filebeat_to_clickhouse_spark.streaming import sink as sink_mod
+
+        pad = [f"v{k}" for k in range(len(LOG_COLUMNS) - 2)]
+        rows = [(None, "no-ts", *pad)] + [
+            (f"2025-{month:02d}-{28 - i:02d}T{i % 24:02d}:{i:02d}:00", f"m{month}-{i}", *pad)
+            for month in (10, 11, 12)
+            for i in range(20)
+        ]
+        batch = spark.createDataFrame(  # 4 input partitions, no shuffle
+            spark.sparkContext.parallelize(rows, 4),
+            ", ".join(["ts string"] + [f"{c} string" for c in LOG_COLUMNS[1:]]),
+        ).select(F.col("ts").cast("timestamp_ntz").alias("timestamp"), *LOG_COLUMNS[1:])
+        assert batch.schema == LOG_ROW_SCHEMA and batch.rdd.getNumPartitions() == 4
+
+        out = str(tmp_path / "logs")
+        fn = sink_mod.foreach_batch_parquet(out)
+        sc = spark.sparkContext
+        sc.setJobGroup("sink-contract", "one epoch of the parquet sink")
+        try:
+            fn(batch, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("sink-contract")) == 1
+
+        parts = sorted(os.listdir(out))
+        assert parts == ["_epochs", "ym=202510", "ym=202511", "ym=202512", "ym=__HIVE_DEFAULT_PARTITION__"]
+        files = {p: os.listdir(os.path.join(out, p)) for p in parts[1:]}
+        assert all(len(f) == 1 and f[0].startswith("epoch-0-") for f in files.values()), files
+        for p, (f,) in files.items():
+            ts = pq.read_table(os.path.join(out, p, f), columns=["timestamp"]).column(0).to_pylist()
+            assert ts == sorted(ts, key=lambda t: (t is None, t)), p
+
+        ref = str(tmp_path / "spark-writer")
+        with_month_partition(batch).write.partitionBy("ym").parquet(ref)
+
+        def footer_types(f):
+            cols = pq.ParquetFile(f).schema
+            return [(c.name, c.physical_type, str(c.logical_type), c.max_definition_level)
+                    for c in (cols.column(i) for i in range(len(cols)))]
+
+        for p in parts[1:]:
+            spark_file = glob.glob(os.path.join(ref, p, "*.parquet"))[0]
+            (f,) = files[p]
+            assert footer_types(os.path.join(out, p, f)) == footer_types(spark_file), p
+
+        got = storage.read_log_table(spark, out)
+        want = with_month_partition(batch).select(*got.columns)
+        assert got.count() == len(rows)
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+        null_row = got.filter(F.col("timestamp").isNull()).collect()
+        assert len(null_row) == 1 and null_row[0].ym is None and null_row[0].message == "no-ts"
+
+    def test_backlog_drains_in_byte_capped_batches(self, spark, tmp_path, monkeypatch):
+        """The spool source caps a batch at about one maximum request body,
+        so a backlog drains in bounded batches — here the cap is lowered to
+        ~1 MB over 10 bodies of ~320 KB — and every row still lands once."""
+        from filebeat_to_clickhouse_spark.streaming import receiver as receiver_mod
+        from filebeat_to_clickhouse_spark.streaming import run_spool_to_parquet
+        from filebeat_to_clickhouse_spark.streaming.receiver import landing_dir, spool_body
+
+        monkeypatch.setattr(receiver_mod, "MAX_BODY_BYTES", 1_000_000)
+        spool = str(tmp_path / "spool")
+        landing_dir(spool)
+        filler = "x" * 250
+        want = []
+        for b in range(10):
+            lines = []
+            for j in range(1000):
+                want.append(f"b{b}-{j}")
+                lines += ['{"index":{}}', f'{{"@timestamp":"2025-12-04T10:{j % 60:02d}:00Z","message":"b{b}-{j}","f":"{filler}"}}']
+            spool_body(spool, "\n".join(lines).encode())
+        q = run_spool_to_parquet(spark, spool, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+        finished = q.awaitTermination(300)
+        q.stop()
+        assert finished and q.exception() is None
+        batches = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
+        assert len(batches) >= 3 and sum(batches) == 10, batches
+        got = [r.message for r in spark.read.parquet(str(tmp_path / "out")).select("message").collect()]
+        assert sorted(got) == sorted(want)
+
+    def test_line_mode_source_is_not_byte_capped(self, spark, tmp_path, monkeypatch):
+        """Only whole-body sources carry the byte cap: a line-mode
+        (``whole_body=False``) ``availableNow`` drain stays one batch, so
+        its watermark sees every file before it moves."""
+        from filebeat_to_clickhouse_spark.streaming import receiver as receiver_mod
+        from filebeat_to_clickhouse_spark.streaming.sources import stream_spool_dir
+
+        monkeypatch.setattr(receiver_mod, "MAX_BODY_BYTES", 1000)
+        spool = tmp_path / "spool"
+        spool.mkdir()
+        for b in range(4):
+            (spool / f"{b}.body").write_text("\n".join(f"b{b}-{j}-" + "x" * 30 for j in range(10)))
+
+        def drain(whole_body):
+            q = (
+                stream_spool_dir(spark, str(spool), whole_body=whole_body)
+                .writeStream.format("noop")
+                .option("checkpointLocation", str(tmp_path / f"ckpt-{whole_body}"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            assert q.awaitTermination(120)
+            return [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
+
+        assert drain(False) == [40]
+        capped = drain(True)
+        assert len(capped) >= 2 and sum(capped) == 4, capped
+
     @staticmethod
     def _as_query(spark, query_id):
         """Run the sink as the streaming query ``query_id`` would: the sink
@@ -555,10 +697,11 @@ class TestParquetIdempotentSink:
 
     def test_concurrent_appends_one_path_serialized(self, spark, tmp_path):
         """build_service's shape: several queries foreachBatch-appending to
-        ONE parquet path at the same time. A shared ``<path>/_temporary/0``
-        staging dir would let one job's commit delete the other's in-flight
-        files; each epoch stages in its own directory instead, so the
-        appends need no serializing lock and every row lands once."""
+        ONE parquet path at the same time. A staging directory shared by
+        the writers would let one commit delete the other's in-flight
+        files; each epoch writes and renames only its own epoch-tagged
+        files instead, so the appends need no serializing lock and every
+        row lands once."""
         import threading
 
         from filebeat_to_clickhouse_spark.streaming import sink as sink_mod
@@ -970,6 +1113,27 @@ class TestKafkaSource:
 
         with pytest.raises(AnalysisException, match="kafka"):
             stream_kafka(spark, "localhost:9092", "logs")
+
+    def test_connector_batches_are_bounded(self, spark, monkeypatch):
+        """The connector caps each micro-batch's records, so a restart over
+        a backlog never collects it whole into the driver-side sink."""
+        import pytest
+        from pyspark.sql.streaming.readwriter import DataStreamReader
+
+        from filebeat_to_clickhouse_spark.streaming import sources
+
+        seen = {}
+        option = DataStreamReader.option
+
+        def record(self, key, value):
+            seen[key] = value
+            return option(self, key, value)
+
+        monkeypatch.setattr(DataStreamReader, "option", record)
+        with pytest.raises(Exception, match="kafka"):  # no spark-sql-kafka here
+            sources.stream_kafka(spark, "localhost:9092", "logs")
+        assert seen["maxOffsetsPerTrigger"] == str(sources.KAFKA_MAX_OFFSETS_PER_TRIGGER)
+        assert sources.KAFKA_MAX_OFFSETS_PER_TRIGGER == 102_400
 
     def test_kafka_end_to_end_when_broker_available(self, spark, tmp_path):
         """REAL e2e: produce → stream_kafka → bulk-parse → normalize →
